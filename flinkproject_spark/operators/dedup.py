@@ -380,8 +380,10 @@ def exact_jaccard_pairs(
 # oracle-identical) but a hard bound on the quadratic posting expansion
 # where one runaway stop-shingle would otherwise dominate the whole job.
 # NOT the function default (ADVICE r05 #3): library callers keep
-# exact-truth semantics unless they opt in; the driver query and the sf1
-# scale bench pass it explicitly.
+# exact-truth semantics unless they opt in; the driver query passes it
+# explicitly. BENCH_PR_SCALE.md measured the cap at 10x sf0.1: the
+# disjoint corpus drops nothing, and it cuts the verbatim-clone corpus's
+# posting expansion 2.7x.
 PR_MAX_DF = 100
 
 
@@ -1950,14 +1952,16 @@ def _neighbor_min(edges: DataFrame, labels: DataFrame, use_broadcast: bool) -> D
     )
 
 
-# Measured crossover for algorithm="auto" (tools/bench_cc_scale.py, sf0.1
-# hardware profile, BENCH_CC_SCALE.md): below ~1M edges the broadcast-
-# gated propagation loop wins (map-side rounds, no groupBy state); above
-# it the alternating-star form's join-free rounds and absent broadcast
-# overtake — and past broadcast_max_edges propagation loses its map-side
-# join anyway, so star is strictly safer. The constant is deliberately
-# conservative (= the broadcast gate): at 100 TB an LSH pair graph lands
-# far above it and auto always picks star.
+# The algorithm="auto" switch. BENCH_CC_SCALE.md's "connected_components
+# (propagation) vs connected_components_star" table has star winning at
+# every size on its diameter-adversarial chain-heavy graphs, and at ~2M
+# edges propagation exceeded its 50-round bound while star converged in
+# 9 rounds / 21 s. Propagation is kept below the broadcast gate because
+# real LSH pair graphs are low-diameter: there it converges in 3-5
+# broadcast map-side rounds against star's fixed 8-9 shuffle rounds (the
+# note under the same table). Above the gate the edge list cannot
+# broadcast and star is strictly the right form; at 100 TB an LSH pair
+# graph lands far above it and auto always picks star.
 STAR_MIN_EDGES = 2_000_000
 
 
@@ -1986,7 +1990,7 @@ def connected_components(
     frontier-advancing neighbour steps, so path-heavy graphs converge in
     O(effective diameter) rounds with a small constant, not O(log d) —
     measured 35+ rounds on a 10k-edge chain/clique/random mix
-    (tools/bench_cc_scale.py). max_iter=50 covers that with rounds that
+    (BENCH_CC_SCALE.md). max_iter=50 covers that with rounds that
     are flat-cost; genuinely high-diameter graphs belong on
     `connected_components_star` (proven O(log^2 n)). Raises RuntimeError
     rather than returning non-converged labels.
@@ -2055,8 +2059,8 @@ def connected_components(
         # Implemented WITHOUT a join: the obvious form (label table joined
         # to itself on the label VALUE) exhibited ~3x wall-time growth per
         # round past ~18 rounds at 10k edges with constant plan, inputs,
-        # and outputs (a JVM-side join pathology measured in
-        # tools/bench_cc_scale.py debugging; broadcast hint, AQE, and
+        # and outputs (a JVM-side join pathology measured while building
+        # BENCH_CC_SCALE.md; broadcast hint, AQE, and
         # separate checkpoints made no difference). This union/window form
         # — "question" rows keyed by my label, "answer" rows keyed by my
         # id carrying my label; the per-key min over answers IS
@@ -2275,7 +2279,7 @@ def dedup_clusters(
     algorithm="auto": MEASURE the edge count once (off an eager
     localCheckpoint both algorithms reuse) and pick propagation below
     STAR_MIN_EDGES, star above — the crossover recorded in
-    BENCH_CC_SCALE.md by tools/bench_cc_scale.py."""
+    BENCH_CC_SCALE.md."""
     if algorithm not in ("propagation", "star", "auto"):
         raise ValueError(f"unknown algorithm {algorithm!r}")
     if pairs is None:

@@ -351,32 +351,12 @@ def cms_frequency_report(
     sound = est >= exact, TRUE by construction — a FALSE row means the
     hash wiring is broken, which is exactly what the oracle would catch.
     """
-    keys = events.select(F.col("user_id").cast("string").alias("key"))
-    bucket = lambda key_col, i_col: F.pmod(  # noqa: E731
-        K.hash64(F.concat(F.lit("cms:"), i_col.cast("string"), F.lit(":"), key_col)),
-        F.lit(w),
-    )
     # ONE corpus pass: the per-key exact counts (needed for calibration
-    # anyway) also build the counters — each bucket's count is the SUM of
-    # its colliding keys' counts, so exploding the key-cardinality
-    # aggregate d ways is bit-identical to exploding the raw event stream
-    # and far smaller (r11 optimization; the r10 form scanned events
-    # twice and exploded every event row x d)
-    exact = (
-        keys.groupBy("key")
-        .agg(F.count("*").alias("exact_ct"))
-        .localCheckpoint(eager=False)  # counters + top-k both read it
-    )
-    counters = (
-        exact.withColumn("i", F.explode(F.sequence(F.lit(0), F.lit(d - 1))))
-        .withColumn("bucket", bucket(F.col("key"), F.col("i")))
-        .groupBy("i", "bucket")
-        .agg(F.sum("exact_ct").alias("c"))
-    )
+    # anyway) build the counters too; counters and top-k both read them
+    exact = _cms_key_counts(events).localCheckpoint(eager=False)
+    counters = _cms_counters_from_counts(exact, d, w)
     top = exact.orderBy(F.desc("exact_ct"), F.asc("key")).limit(k)
-    probes = top.withColumn(
-        "i", F.explode(F.sequence(F.lit(0), F.lit(d - 1)))
-    ).withColumn("bucket", bucket(F.col("key"), F.col("i")))
+    probes = _cms_probe_rows(top, d, w)
     est = (
         probes.join(F.broadcast(counters), ["i", "bucket"])
         .groupBy("key", "exact_ct")
@@ -388,6 +368,53 @@ def cms_frequency_report(
         "cms_est",
         (F.col("cms_est") - F.col("exact_ct")).alias("overshoot"),
         (F.col("cms_est") >= F.col("exact_ct")).alias("sound"),
+    )
+
+
+def cms_counters(events: DataFrame, d: int = 4, w: int = 256) -> DataFrame:
+    """The Count-Min Sketch's MERGEABLE unit: the (i, bucket, c) counter
+    table of `events` — d x w counters at most, whatever the input
+    volume. Counters merge by ADDITION across any partition of the input
+    (executor, micro-batch, day), so the streaming sink appends
+    batch-local tables and the reader folds them by SUM; the result is
+    the counter table cms_frequency_report estimates from."""
+    return _cms_counters_from_counts(_cms_key_counts(events), d, w)
+
+
+def _cms_key_counts(events: DataFrame) -> DataFrame:
+    return (
+        events.select(F.col("user_id").cast("string").alias("key"))
+        .groupBy("key")
+        .agg(F.count("*").alias("exact_ct"))
+    )
+
+
+def _cms_probe_rows(keyed: DataFrame, d: int, w: int) -> DataFrame:
+    """`keyed` (carrying a string `key`) exploded to its d (i, bucket)
+    cells: the one copy of the 'cms:{row}:{key}' bucket hash."""
+    return keyed.withColumn(
+        "i", F.explode(F.sequence(F.lit(0), F.lit(d - 1)))
+    ).withColumn(
+        "bucket",
+        F.pmod(
+            K.hash64(
+                F.concat(F.lit("cms:"), F.col("i").cast("string"), F.lit(":"), F.col("key"))
+            ),
+            F.lit(w),
+        ),
+    )
+
+
+def _cms_counters_from_counts(exact: DataFrame, d: int, w: int) -> DataFrame:
+    """Counter build over a (key, exact_ct) frame: each bucket's count is
+    the SUM of its colliding keys' counts, so exploding the
+    key-cardinality aggregate d ways is bit-identical to exploding the
+    raw event stream and far smaller (r11 optimization; the r10 form
+    scanned events twice and exploded every event row x d)."""
+    return (
+        _cms_probe_rows(exact, d, w)
+        .groupBy("i", "bucket")
+        .agg(F.sum("exact_ct").alias("c"))
     )
 
 

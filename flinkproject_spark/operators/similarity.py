@@ -19,7 +19,9 @@ decimals to absorb any engine-side summation-order differences.
 
 from __future__ import annotations
 
+import logging
 import os
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -789,6 +791,16 @@ def kmeans_auto_k(
 KM_TASK_TARGET_BYTES = 4 << 20
 
 
+def _local_path(uri: str) -> str:
+    """Filesystem path of a local `inputFiles()` entry. Spark reports
+    percent-encoded URIs (`file:///a%20b/part-0.parquet`), so the path is
+    parsed and unquoted, never sliced; a non-local scheme raises."""
+    u = urlparse(uri)
+    if u.scheme not in ("", "file"):
+        raise ValueError(f"not a local file: {uri}")
+    return unquote(u.path)
+
+
 def _km_parallelize(q: DataFrame) -> DataFrame:
     """Minimum-parallelism guard for the assignment passes: a small
     parquet collection can arrive as ONE input split (the sf10 screen
@@ -808,18 +820,24 @@ def _km_parallelize(q: DataFrame) -> DataFrame:
     par = sc.defaultParallelism
     if splits >= par:
         return q
+    files = q.inputFiles()
     try:
-        nbytes = sum(
-            os.path.getsize(p[7:] if p.startswith("file://") else p)
-            for p in q.inputFiles()
-        )
-    except (OSError, ValueError):  # non-local / unsizable source
-        nbytes = 0
+        nbytes = sum(os.path.getsize(_local_path(p)) for p in files)
+        reason = f"{len(files)} input file(s), {nbytes} bytes"
+    except (OSError, ValueError) as ex:  # non-local / unsizable source
+        nbytes, reason = 0, ex
     if nbytes > 0:
         import math
 
         want = min(par, max(splits, math.ceil(nbytes / KM_TASK_TARGET_BYTES)))
     else:
+        logging.getLogger(__name__).warning(
+            "_km_parallelize: input size unknown (%s); spreading %d split(s) "
+            "to defaultParallelism=%d",
+            reason,
+            splits,
+            par,
+        )
         want = par
     if want <= splits:
         return q

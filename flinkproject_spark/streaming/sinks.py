@@ -661,10 +661,12 @@ def incremental_dedup_writer(
     operators.dedup.incremental_dedup, O(batch) per trigger instead of a
     full-corpus re-dedup.
 
-    At scale the index is a Delta/bucketed table MERGEd on content_md5;
-    parquet append keeps the same shape here. Exactly-once posture: pair
-    with idempotent_parquet_writer-style batchId keying when the corpus
-    path must survive replays.
+    The index is one flat parquet directory, re-scanned on every trigger
+    (an O(index) read; the join itself is O(batch)). There is no second,
+    bucketed layout: BENCH_INDEX_CROSSOVER.md measured it slower than
+    the flat scan at 18.2M index rows, for trickle and bulk triggers
+    alike. Exactly-once posture: pair with idempotent_parquet_writer-
+    style batchId keying when the corpus path must survive replays.
     """
     from pyspark.errors import AnalysisException
     from pyspark.sql import Window
@@ -698,168 +700,10 @@ def incremental_dedup_writer(
     return fn
 
 
-class BucketedParquetIndex:
-    """Hash-bucketed parquet layout for the incremental sinks' persisted
-    state (VERDICT r07 task 4): rows live under `pb=<k>/` directories
-    keyed by pmod(hash64(key), n_buckets), so a per-batch read PRUNES to
-    the buckets the batch's keys actually touch (partition pruning at the
-    file listing — the flat layout re-scanned the whole index every
-    trigger, the measured per-batch wall growth in BENCH_CC_SCALE.md).
-    Appends `repartition("pb")` first, so each touched bucket gains
-    exactly ONE file per batch, and `maybe_compact` rewrites the index to
-    one file per bucket every `compact_every` batches — bounding the
-    file count the next reads must open (the LSM discipline, hand-rolled
-    on parquet).
-
-    Touched-set discovery is a driver-side collect BOUNDED by n_buckets
-    (the same bounded-metadata contract as routing's n_buckets collect).
-
-    Production caveat: the compaction overwrite is not atomic — parquet
-    directories have no commit protocol, so a crash mid-compaction loses
-    the index (the sink's outputs are unaffected; rebuild the index by
-    re-scanning the corpus). A transactional table format (Delta/Iceberg)
-    gives the same layout with atomic compaction; this class documents
-    the plan shape those formats execute.
-    """
-
-    def __init__(
-        self,
-        path: str,
-        key_cols: list[str],
-        n_buckets: int = 32,
-        compact_every: int | None = 8,
-    ) -> None:
-        self.path = path
-        self.key_cols = list(key_cols)
-        self.n_buckets = n_buckets
-        self.compact_every = compact_every
-
-    # layout marker: hashing config persisted next to the data, so a
-    # writer restarted with a DIFFERENT n_buckets/key set fails loudly
-    # instead of silently pruning against the wrong hash (a drifted
-    # config would re-admit duplicates with zero errors). Driver-side
-    # file I/O — local/posix paths, this repo's reality; an object-store
-    # deployment writes the same marker through its FS client.
-    def _marker_path(self) -> str:
-        return os.path.join(self.path, "_BUCKETED_LAYOUT.json")
-
-    def _check_or_write_marker(self) -> None:
-        import json as _json
-
-        want = {"key_cols": self.key_cols, "n_buckets": self.n_buckets}
-        mp = self._marker_path()
-        if os.path.exists(mp):
-            with open(mp) as fh:
-                have = _json.load(fh)
-            if have != want:
-                raise ValueError(
-                    f"BucketedParquetIndex at {self.path}: layout marker "
-                    f"{have} != configured {want} — a bucketed store's "
-                    "hashing config is immutable (re-bucket by rewriting "
-                    "the store, never by changing the writer config)"
-                )
-            return
-        if os.path.isdir(self.path) and any(
-            not e.startswith(("_", ".")) and not e.startswith("pb=")
-            for e in os.listdir(self.path)
-        ):
-            raise ValueError(
-                f"BucketedParquetIndex at {self.path}: path holds "
-                "non-bucketed data (no pb= directories) — this store was "
-                "written with the FLAT layout; pick one layout per store"
-            )
-        os.makedirs(self.path, exist_ok=True)
-        with open(mp, "w") as fh:
-            _json.dump(want, fh)
-
-    def _with_pb(self, df: DataFrame) -> DataFrame:
-        from flinkproject_spark import functions as K
-
-        key = F.concat_ws(":", *[F.col(c).cast("string") for c in self.key_cols])
-        return df.withColumn(
-            "pb", F.pmod(K.hash64(key), F.lit(self.n_buckets)).cast("int")
-        )
-
-    def read_pruned(self, spark, probe: DataFrame) -> DataFrame | None:
-        """Index rows in the buckets `probe`'s keys touch (probe must
-        carry the key columns; other columns are ignored), or None
-        before the first append."""
-        from pyspark.errors import AnalysisException
-
-        try:
-            idx = spark.read.parquet(self.path)
-        except AnalysisException:
-            if os.path.isdir(self.path) and any(
-                not e.startswith(("_", ".")) for e in os.listdir(self.path)
-            ):
-                # data exists but cannot be analyzed (corruption, schema
-                # drift, conflicting partition dirs): propagating beats
-                # silently running with the dedup gate off — the same
-                # contract the flat read path documents
-                raise
-            logging.getLogger(__name__).info(
-                "BucketedParquetIndex %s: no data yet; treating as empty",
-                self.path,
-            )
-            return None
-        if "pb" not in idx.columns:
-            # a flat-layout store at this path: refusing loudly beats a
-            # silent full-scan read joined under bucketed assumptions
-            # (and the reverse mix would corrupt the layout on append)
-            raise ValueError(
-                f"BucketedParquetIndex at {self.path}: existing data has "
-                "no pb= partition column — this path was written with "
-                "the FLAT layout; pick one layout per store"
-            )
-        self._check_or_write_marker()
-        touched = [
-            r.pb for r in self._with_pb(probe).select("pb").distinct().collect()
-        ]
-        return idx.filter(F.col("pb").isin(touched)).drop("pb")
-
-    def read_all(self, spark) -> DataFrame:
-        """Full store contents WITHOUT the internal pb routing column —
-        the reader external consumers should use (the on-disk layout
-        carries pb as a partition column; it is an implementation
-        detail, not part of the stored rows' schema)."""
-        return spark.read.parquet(self.path).drop("pb")
-
-    def append(self, df: DataFrame) -> None:
-        self._check_or_write_marker()
-        (
-            self._with_pb(df)
-            .repartition("pb")
-            .write.mode("append")
-            .partitionBy("pb")
-            .parquet(self.path)
-        )
-
-    def maybe_compact(self, spark, batch_id: int) -> None:
-        if not self.compact_every or (batch_id + 1) % self.compact_every:
-            return
-        from pyspark.errors import AnalysisException
-
-        try:
-            full = spark.read.parquet(self.path).localCheckpoint(eager=True)
-        except AnalysisException:
-            return  # nothing ever appended (all batches empty): no-op
-        (
-            full.repartition("pb")
-            .write.mode("overwrite")
-            .partitionBy("pb")
-            .parquet(self.path)
-        )
-        # the overwrite deleted the whole directory, marker included —
-        # restore it so a restart with a drifted config still fails loudly
-        self._check_or_write_marker()
-
-
 def srp_incremental_writer(
     corpus_path: str,
     sig_index_path: str,
     threshold: float = 0.9,
-    index_buckets: int | None = None,
-    compact_every: int | None = 8,
     bits: int = 16,
     bands: int = 4,
 ) -> Callable[[DataFrame, int], None]:
@@ -871,12 +715,11 @@ def srp_incremental_writer(
     the stored corpus vectors, and only vectors with no verified match
     are admitted — their embeddings append to the corpus, their
     signatures to the index. JOIN work is O(batch x bucket-collisions)
-    per trigger; the flat-parquet index/corpus re-scan is still an
-    O(corpus) READ per trigger (measured ~1 s per 8k index rows in
-    BENCH_CC_SCALE.md), so at scale store the index bucketed/partitioned
-    on (band, bucket) and the corpus bucketed on vec_id — the reads then
-    prune to the buckets the batch touches and the trigger cost is truly
-    O(batch).
+    per trigger; both flat parquet stores, index and corpus, are
+    re-scanned on every trigger (an O(corpus) READ). There is no second,
+    bucketed layout: BENCH_INDEX_CROSSOVER.md measured it slower than
+    the flat scan at 18.2M index rows (trickle trigger 4.1 s flat vs
+    4.95 s bucketed; bulk build growth 1.48x flat vs 1.92x bucketed).
 
     Within-batch policy is CONSERVATIVE: a vector is also dropped when it
     verifies against any lower-vec_id batch member, admitted or not — a
@@ -887,22 +730,6 @@ def srp_incremental_writer(
     clustering — connected components inside foreachBatch — buys back the
     borderline members at iterative-job cost; wrong trade for a sink.)
 
-    `index_buckets=N` switches BOTH stores to the
-    :class:`BucketedParquetIndex` layout — the signature index bucketed
-    on (band, bucket), the corpus on vec_id — so each trigger reads only
-    the buckets the batch's signatures (and then its candidates' vec_ids)
-    touch, plus compaction every `compact_every` batches: trigger cost
-    becomes O(batch), not O(corpus) (VERDICT r07 task 4; the flat
-    default re-scans both stores per trigger, fine for short runs and
-    pinned by the existing tests). Admitted ROWS are IDENTICAL across
-    layouts (full-row parity pinned by test): pruning only removes index
-    rows that cannot join the batch. One schema caveat: the bucketed
-    corpus carries the internal `pb` routing column as an on-disk
-    partition column — consumers read it through
-    ``BucketedParquetIndex(corpus_path, ["vec_id"], N).read_all(spark)``
-    (or drop("pb")), never raw, exactly as they would consult a table
-    format's metadata rather than its directory layout.
-
     `bits`/`bands` size the SRP banding — STATIC per writer because the
     persisted signature index must be built with one consistent family
     (re-banding an existing index means re-signing the corpus). Size
@@ -912,12 +739,6 @@ def srp_incremental_writer(
     verification — not storage layout — the growing per-batch cost
     (BENCH_SINKS_SCALE.md measures exactly that conflation).
     """
-    sig_store = BucketedParquetIndex(
-        sig_index_path, ["band", "bucket"], index_buckets or 32, compact_every
-    )
-    corpus_store = BucketedParquetIndex(
-        corpus_path, ["vec_id"], index_buckets or 32, compact_every
-    )
 
     def _verified_pairs(cand: DataFrame, left: DataFrame, right: DataFrame) -> DataFrame:
         """cand (vec_a, vec_b) against embeddings in left/right -> pairs
@@ -956,42 +777,31 @@ def srp_incremental_writer(
         spark = batch.sparkSession
         sig = srp_signatures(batch, bits, bands).localCheckpoint(eager=True)
         dropped = None
-        corpus = None
-        if index_buckets is not None:
-            idx = sig_store.read_pruned(spark, sig)
-        else:
-            try:
-                idx = spark.read.parquet(sig_index_path)
-                corpus = spark.read.parquet(corpus_path)
-            except AnalysisException:
-                # First batch: neither the signature index nor the corpus
-                # exists yet.  Only PATH_NOT_FOUND-class failures mean that —
-                # corrupt files / schema drift / IO errors must propagate, or
-                # the sink would silently skip cross-corpus dedup and admit
-                # duplicates (the invariant this writer exists to guarantee).
-                logging.getLogger(__name__).info(
-                    "srp_incremental_writer batch %d: no index at %s yet; "
-                    "skipping cross-corpus check",
-                    batch_id,
-                    sig_index_path,
-                )
-                idx = None
+        try:
+            idx = spark.read.parquet(sig_index_path)
+            corpus = spark.read.parquet(corpus_path)
+        except AnalysisException:
+            # First batch: neither the signature index nor the corpus
+            # exists yet.  Only PATH_NOT_FOUND-class failures mean that —
+            # corrupt files / schema drift / IO errors must propagate, or
+            # the sink would silently skip cross-corpus dedup and admit
+            # duplicates (the invariant this writer exists to guarantee).
+            logging.getLogger(__name__).info(
+                "srp_incremental_writer batch %d: no index at %s yet; "
+                "skipping cross-corpus check",
+                batch_id,
+                sig_index_path,
+            )
+            idx = None
         if idx is not None:
             cand_x = (
                 sig.join(idx.withColumnRenamed("vec_id", "vec_b"), ["band", "bucket"])
                 .select(F.col("vec_id").alias("vec_a"), "vec_b")
                 .distinct()
             )
-            if index_buckets is not None:
-                # the PRUNED index drives the second pruned read: only
-                # corpus buckets holding vec_ids that can appear as
-                # candidates are fetched (a cheap superset of the
-                # candidate vec_b set — never materializes candidates)
-                corpus = corpus_store.read_pruned(spark, idx.select("vec_id"))
-            if corpus is not None:
-                dropped = _verified_pairs(cand_x, batch, corpus).select(
-                    F.col("vec_a").alias("vec_id")
-                ).distinct()
+            dropped = _verified_pairs(cand_x, batch, corpus).select(
+                F.col("vec_a").alias("vec_id")
+            ).distinct()
         # within-batch: candidates through shared buckets, lower id wins
         s2 = sig.select(F.col("vec_id").alias("vec_b"), "band", "bucket")
         cand_in = (
@@ -1006,14 +816,8 @@ def srp_incremental_writer(
         dropped = in_batch if dropped is None else dropped.unionByName(in_batch).distinct()
         admitted = batch.join(dropped, "vec_id", "left_anti").localCheckpoint(eager=True)
         new_sigs = sig.join(admitted.select("vec_id"), "vec_id", "left_semi")
-        if index_buckets is not None:
-            corpus_store.append(admitted)
-            sig_store.append(new_sigs)
-            corpus_store.maybe_compact(spark, batch_id)
-            sig_store.maybe_compact(spark, batch_id)
-        else:
-            admitted.write.mode("append").parquet(corpus_path)
-            new_sigs.write.mode("append").parquet(sig_index_path)
+        admitted.write.mode("append").parquet(corpus_path)
+        new_sigs.write.mode("append").parquet(sig_index_path)
 
     return fn
 
@@ -1022,8 +826,6 @@ def span_incremental_writer(
     gram_index_path: str,
     spans_path: str,
     w: int = 8,
-    index_buckets: int | None = None,
-    compact_every: int | None = 8,
 ) -> Callable[[DataFrame, int], None]:
     """Ingest-time repeated-SPAN detection: the streaming twin of
     operators.dedup.duplicated_spans. Each micro-batch's rolling w-token
@@ -1033,15 +835,9 @@ def span_incremental_writer(
     interval-merge semantics to the batch operator) which append to
     `spans_path`, and the batch's distinct (doc_id, gh) rows append to
     the index. Join work is O(batch x gram collisions) per trigger; the
-    flat-parquet default re-scans the whole index per trigger —
-    `index_buckets=N` switches the gram index to the
-    :class:`BucketedParquetIndex` layout keyed on gh (VERDICT r07 task
-    4): reads prune to the buckets the batch's grams touch, appends add
-    one file per touched bucket, compaction every `compact_every`
-    batches bounds the file count. Detected spans are IDENTICAL across
-    layouts (parity-pinned by test) — pruning only drops index rows
-    whose gh cannot join the batch, and the anti-join hygiene sees every
-    bucket the batch writes to.
+    flat parquet index is re-scanned on every trigger (an O(index)
+    read). There is no second, bucketed layout: BENCH_INDEX_CROSSOVER.md
+    measured it slower than the flat scan at 18.2M index rows.
 
     Semantics are ONE-SIDED by design: a span records that an ingested
     document repeats content seen at-or-before its ingest time; the
@@ -1063,14 +859,10 @@ def span_incremental_writer(
     deterministic; the gram index itself is replay-safe via the
     anti-join below, so the replay sees the same effective index) —
     read the log with :func:`read_spans`, which collapses the duplicate
-    (batch_id, span) rows exactly as :func:`read_cms_counters` does for
-    counter deltas. Same doc re-ingested in a LATER batch keeps both
+    (batch_id, span) rows the way :func:`read_delta_log` does for sketch
+    deltas. Same doc re-ingested in a LATER batch keeps both
     annotations (different batch_id — a real second ingest event).
     """
-    gram_store = BucketedParquetIndex(
-        gram_index_path, ["gh"], index_buckets or 32, compact_every
-    )
-
     def fn(batch: DataFrame, batch_id: int) -> None:
         from pyspark.errors import AnalysisException
 
@@ -1081,19 +873,16 @@ def span_incremental_writer(
 
         spark = batch.sparkSession
         gh = span_gram_rows(batch, w).localCheckpoint(eager=True)
-        if index_buckets is not None:
-            idx = gram_store.read_pruned(spark, gh)
-        else:
-            try:
-                idx = spark.read.parquet(gram_index_path)
-            except AnalysisException:
-                logging.getLogger(__name__).info(
-                    "span_incremental_writer batch %d: no index at %s yet; "
-                    "within-batch matching only",
-                    batch_id,
-                    gram_index_path,
-                )
-                idx = None
+        try:
+            idx = spark.read.parquet(gram_index_path)
+        except AnalysisException:
+            logging.getLogger(__name__).info(
+                "span_incremental_writer batch %d: no index at %s yet; "
+                "within-batch matching only",
+                batch_id,
+                gram_index_path,
+            )
+            idx = None
         other = gh.select(F.col("doc_id").alias("doc_b"), "gh")
         matches = (
             gh.join(other, "gh")
@@ -1121,54 +910,7 @@ def span_incremental_writer(
         new_rows = gh.select("doc_id", "gh").distinct()
         if idx is not None:
             new_rows = new_rows.join(idx, ["doc_id", "gh"], "left_anti")
-        if index_buckets is not None:
-            gram_store.append(new_rows)
-            gram_store.maybe_compact(spark, batch_id)
-        else:
-            new_rows.write.mode("append").parquet(gram_index_path)
-
-    return fn
-
-
-def cms_incremental_writer(
-    counters_path: str, d: int = 4, w: int = 256
-) -> Callable[[DataFrame, int], None]:
-    """Streaming Count-Min Sketch: per micro-batch compute the batch's
-    (row, bucket) counter DELTAS (operators.relational.cms_frequency_report
-    hashing, one narrow explode + one groupBy per trigger) and append
-    them tagged with the batch id. CMS counters merge by ADDITION, so the
-    serving sketch is a sum over deltas — read it with
-    :func:`read_cms_counters`, which first collapses duplicate
-    (batch_id, row, bucket) rows. That makes the sink idempotent under
-    foreachBatch retries: a replayed batch recomputes the SAME delta rows
-    (the hashing is deterministic), the reader drops the duplicates, and
-    the merged sketch is exactly the one-shot batch sketch — the
-    append-with-id + dedup-on-read discipline, proven by the replay test
-    the same way the staged-commit JDBC sink is.
-    """
-
-    def fn(batch: DataFrame, batch_id: int) -> None:
-        from flinkproject_spark import functions as K
-
-        keys = batch.select(F.col("user_id").cast("string").alias("key"))
-        hashed = keys.withColumn(
-            "i", F.explode(F.sequence(F.lit(0), F.lit(d - 1)))
-        ).withColumn(
-            "bucket",
-            F.pmod(
-                K.hash64(
-                    F.concat(
-                        F.lit("cms:"), F.col("i").cast("string"),
-                        F.lit(":"), F.col("key"),
-                    )
-                ),
-                F.lit(w),
-            ),
-        )
-        deltas = hashed.groupBy("i", "bucket").agg(F.count("*").alias("c"))
-        deltas.withColumn("batch_id", F.lit(batch_id)).write.mode("append").parquet(
-            counters_path
-        )
+        new_rows.write.mode("append").parquet(gram_index_path)
 
     return fn
 
@@ -1180,94 +922,9 @@ def read_spans(spark, spans_path: str) -> DataFrame:
     so a full-row distinct collapses exactly those — then project the
     batch_id tag away. Rows repeated across DIFFERENT batch_ids survive
     (a document genuinely re-ingested later is a second annotation
-    event). Mirrors :func:`read_cms_counters`'s append-with-id +
+    event). Mirrors :func:`read_delta_log`'s append-with-id +
     dedup-on-read discipline (ADVICE r07)."""
     return spark.read.parquet(spans_path).distinct().drop("batch_id")
-
-
-def read_cms_counters(spark, counters_path: str) -> DataFrame:
-    """Merged CMS counters from the delta log: collapse replayed batches
-    (identical (batch_id, i, bucket) rows — deterministic recomputation —
-    so MAX of the duplicate values is the one true delta), then sum
-    across batches. Returns (i, bucket, c) — the same shape
-    cms_frequency_report's internal counter table has, ready for
-    min-over-rows estimates."""
-    raw = spark.read.parquet(counters_path)
-    per_batch = raw.groupBy("batch_id", "i", "bucket").agg(F.max("c").alias("c"))
-    return per_batch.groupBy("i", "bucket").agg(F.sum("c").alias("c"))
-
-
-def histq_incremental_writer(
-    counters_path: str, lo: int, hi: int, n_bins: int = 256
-) -> Callable[[DataFrame, int], None]:
-    """Streaming histogram quantile sketch: per micro-batch compute the
-    batch's (scope, bin) counter DELTAS against PINNED global edges
-    (operators.relational.histq_bin_deltas — the report docstring's
-    one-pass form: edges [lo, hi] fixed from history, out-of-domain
-    values clamp into edge bins) and append them batch-id-tagged.
-    Histogram counters merge by ADDITION, so the serving sketch is a sum
-    over deltas — read with :func:`read_histq_counters` (per-batch dedup
-    then sum, the CMS delta-log discipline), then
-    relational.histq_quantiles_from_counters serves the same report
-    shape as the batch operator. Completes the sink family's sketch
-    symmetry: CMS (frequency, add), HLL (cardinality, max), histogram
-    (quantiles, add)."""
-
-    def fn(batch: DataFrame, batch_id: int) -> None:
-        from flinkproject_spark.operators.relational import histq_bin_deltas
-
-        histq_bin_deltas(batch, lo, hi, n_bins).withColumn(
-            "batch_id", F.lit(batch_id)
-        ).write.mode("append").parquet(counters_path)
-
-    return fn
-
-
-def read_histq_counters(spark, counters_path: str) -> DataFrame:
-    """Merged histogram counters from the delta log: collapse replayed
-    batches (identical (batch_id, scope, bin) rows — deterministic
-    recomputation — so MAX of duplicates is the one true delta), then
-    sum across batches. Returns (scope, bin, c), the input shape
-    relational.histq_quantiles_from_counters serves from."""
-    raw = spark.read.parquet(counters_path)
-    per_batch = raw.groupBy("batch_id", "scope", "bin").agg(
-        F.max("c").alias("c")
-    )
-    return per_batch.groupBy("scope", "bin").agg(F.sum("c").alias("c"))
-
-
-def hll_incremental_writer(registers_path: str) -> Callable[[DataFrame, int], None]:
-    """Streaming HyperLogLog unique-visitor sketch: per micro-batch compute
-    the batch-local (day, register) max-rho rows
-    (operators.relational.hll_registers — at most days*64 rows per
-    trigger) and append them. Unlike the CMS sink, NO batch-id tag or
-    dedup-on-read is needed for idempotency: registers merge by MAX,
-    which is idempotent as well as associative, so a crash-replayed
-    batch's identical rows (or a twice-counted key) cannot move the
-    merged sketch — the structural reason HLL is the distributed
-    distinct-count structure while counters need the staged-commit
-    discipline.
-    """
-
-    def fn(batch: DataFrame, batch_id: int) -> None:
-        from flinkproject_spark.operators.relational import hll_registers
-
-        hll_registers(batch).write.mode("append").parquet(registers_path)
-
-    return fn
-
-
-def read_hll_registers(spark, registers_path: str) -> DataFrame:
-    """Merged (scope, reg, rho) registers from the append log: one MAX
-    groupBy over rows bounded by batches*days*64, ready for
-    operators.relational.hll_estimates. A serving deployment snapshots
-    the merged table periodically (same compaction discipline as the CMS
-    delta log)."""
-    return (
-        spark.read.parquet(registers_path)
-        .groupBy("scope", "reg")
-        .agg(F.max("rho").alias("rho"))
-    )
 
 
 def _scoring_split_writer(
@@ -1501,18 +1158,25 @@ def read_assignments(spark, assignments_path: str) -> DataFrame:
     return spark.read.parquet(assignments_path).distinct().drop("batch_id")
 
 
+# Batches per z-ordered window. The writer closes a window and the reader
+# splits closed windows from open incoming directories at this boundary;
+# one constant, because a reader using a wider window than the writer
+# opened no incoming directories past its own boundary and silently lost
+# every row between the two.
+ZORDER_WINDOW_BATCHES = 4
+
+
 def zorder_compacting_writer(
     base_path: str,
     cols: list[str],
     bits: int = 8,
-    window_batches: int = 4,
     n_files: int = 4,
 ) -> Callable[[DataFrame, int], None]:
     """Streaming twin of the Z-order layout tier: micro-batches land as
     fast appends under ``incoming/batch_id=N`` (overwrite per batch-id
     directory — a crash-replayed batch rewrites its own directory, so
     the sink is idempotent the same way scoring_split_writer is), and
-    every `window_batches` trigger the accumulated window is REWRITTEN
+    every ZORDER_WINDOW_BATCHES triggers the accumulated window is REWRITTEN
     once into ``zorder/window=K`` via operators.layout.zorder_layout.
 
     This is the lakehouse OPTIMIZE-ZORDER discipline as a foreachBatch
@@ -1532,10 +1196,10 @@ def zorder_compacting_writer(
         batch.write.mode("overwrite").parquet(
             f"{base_path}/incoming/batch_id={batch_id}"
         )
-        if (batch_id + 1) % window_batches:
+        if (batch_id + 1) % ZORDER_WINDOW_BATCHES:
             return
-        window = batch_id // window_batches
-        lo = window * window_batches
+        window = batch_id // ZORDER_WINDOW_BATCHES
+        lo = window * ZORDER_WINDOW_BATCHES
         spark = batch.sparkSession
         acc = spark.read.parquet(
             *[f"{base_path}/incoming/batch_id={b}" for b in range(lo, batch_id + 1)]
@@ -1547,108 +1211,113 @@ def zorder_compacting_writer(
     return fn
 
 
-def read_zordered(spark, base_path: str, upto_batch: int, window_batches: int = 4):
+def read_zordered(spark, base_path: str, upto_batch: int):
     """Read the compacted store: all closed z-ordered windows plus the
     raw incoming directories of the still-open window. Returns a
     DataFrame over exactly the rows of batches 0..upto_batch (replayed
     duplicates impossible: both layers are overwrite-per-directory)."""
-    closed = (upto_batch + 1) // window_batches
+    closed = (upto_batch + 1) // ZORDER_WINDOW_BATCHES
     paths = [f"{base_path}/zorder/window={w}" for w in range(closed)]
     paths += [
         f"{base_path}/incoming/batch_id={b}"
-        for b in range(closed * window_batches, upto_batch + 1)
+        for b in range(closed * ZORDER_WINDOW_BATCHES, upto_batch + 1)
     ]
     return spark.read.parquet(*paths)
 
 
-def gram_incremental_writer(gram_path: str) -> Callable[[DataFrame, int], None]:
-    """Streaming twin of the exact covariance tier: per micro-batch
-    compute the batch's d x d Gram partials
-    (operators.similarity.embedding_gram — d(d+1)/2 exact-integer rows
-    per trigger, independent of batch size) and append them tagged with
-    batch_id. Gram partials merge by ADDITION (sxy/sx/sy/n are sums), so
-    the serving covariance is a sum over deltas — read with
-    :func:`read_gram`, which collapses replayed (batch_id, i, j)
-    duplicates first (deterministic recomputation -> MAX of dupes is the
-    one true delta), the CMS delta-log discipline. Downstream, the
-    merged table feeds whitening_transform unchanged: the whitening
-    matrix can be refreshed per trigger at O(d^2) cost while the
-    collection streams in."""
-
-    def fn(batch: DataFrame, batch_id: int) -> None:
-        from flinkproject_spark.operators.similarity import embedding_gram
-
-        embedding_gram(batch).drop("cov").withColumn(
-            "batch_id", F.lit(batch_id)
-        ).write.mode("append").parquet(gram_path)
-
-    return fn
-
-
-def read_gram(spark, gram_path: str) -> DataFrame:
-    """Merged exact Gram ingredients from the delta log: per-batch dedup
-    (MAX over identical replayed rows), then sum across batches.
-    Returns (i, j, sxy, sx, sy, n) — the same exact-integer shape
-    embedding_gram emits, minus the derived cov column."""
-    raw = spark.read.parquet(gram_path)
-    per_batch = raw.groupBy("batch_id", "i", "j").agg(
-        F.max("sxy").alias("sxy"), F.max("sx").alias("sx"),
-        F.max("sy").alias("sy"), F.max("n").alias("n"),
-    )
-    return per_batch.groupBy("i", "j").agg(
-        F.sum("sxy").alias("sxy"), F.sum("sx").alias("sx"),
-        F.sum("sy").alias("sy"), F.sum("n").alias("n"),
-    )
-
-
 # ---------------------------------------------------------------------------
-# delta-log snapshot compaction (the discipline every sketch reader cites)
+# mergeable sketch state: one delta log for CMS, HLL, histogram and Gram
 # ---------------------------------------------------------------------------
 SNAPSHOT_BATCH_ID = -1  # foreachBatch ids are >= 0: never collides
 
 
-def compact_delta_log(spark, path: str, key_cols: list[str]) -> None:
-    """Snapshot-compact an additive delta-log sink directory (CMS / Gram /
-    histogram counters): fold the whole log — per-batch replay dedup
-    then sum, exactly what the serving reader does — into ONE snapshot
-    batch tagged SNAPSHOT_BATCH_ID, and rewrite the directory to just
-    that batch. Every value column is summed; `key_cols` are the grouping
-    keys. The readers need no changes: a snapshot row is just another
-    batch delta to them, so reads after compaction cost O(keys), not
-    O(keys x batches) — the periodic-snapshot discipline the reader
-    docstrings promise, implemented.
+def delta_log_writer(
+    path: str, delta: "Callable[[DataFrame], DataFrame]"
+) -> Callable[[DataFrame, int], None]:
+    """Streaming form of a mergeable sketch: per micro-batch append
+    `delta(batch)` tagged with the batch id. The sketch state is the fold
+    of all deltas, served by :func:`read_delta_log` with the sketch's
+    merge (the keyed, mergeable-state design of Flink's state backend):
 
-    MAX-merged logs (HLL registers) use :func:`compact_register_log` —
-    folding by SUM would corrupt a max-semantics log, so the two are
-    separate functions rather than a flag someone can pass wrongly.
+    | sketch    | delta                                       | key_cols        | merge |
+    |-----------|---------------------------------------------|-----------------|-------|
+    | CMS       | relational.cms_counters                     | i, bucket       | sum   |
+    | HLL       | relational.hll_registers                    | scope, reg      | max   |
+    | histogram | relational.histq_bin_deltas(b, lo, hi)      | scope, bin      | sum   |
+    | Gram      | similarity.embedding_gram(b).drop("cov")    | i, j            | sum   |
 
-    Non-atomic, like BucketedParquetIndex.maybe_compact: the rewrite is
-    write-tmp / delete / rename, and a crash in the window loses the log
-    (the sink's upstream outputs are unaffected; rebuild by re-ingesting
-    or restoring the previous snapshot). Run it OUTSIDE the streaming
-    query's replay window (after checkpoint commit): a batch replayed
-    AFTER its rows were folded into the snapshot would double-count,
-    since the batch-id that dedup-on-read keys on is gone. A
-    transactional table format gives the same fold atomically."""
+    Idempotent under foreachBatch retries: a replayed batch recomputes
+    the SAME delta rows under the SAME batch id (every delta above is
+    deterministic), and the reader collapses them before merging — the
+    append-with-id + dedup-on-read discipline, so the merged sketch is
+    exactly the one-shot batch sketch."""
+
+    def fn(batch: DataFrame, batch_id: int) -> None:
+        delta(batch).withColumn("batch_id", F.lit(batch_id)).write.mode(
+            "append"
+        ).parquet(path)
+
+    return fn
+
+
+def _replay_deduped(raw: DataFrame, key_cols: list[str], merge) -> tuple:
+    """(per-batch rows, value columns) of a delta log: a replayed batch
+    appends identical rows under the same batch id, so MAX per
+    (batch_id, key) is the one true delta. Shared by the reader and the
+    compactor, so both fold the same log the same way."""
+    if merge is not F.sum and merge is not F.max:
+        raise ValueError(f"delta-log merge must be F.sum or F.max, got {merge!r}")
+    vals = [c for c in raw.columns if c not in set(key_cols) | {"batch_id"}]
+    per_batch = raw.groupBy("batch_id", *key_cols).agg(
+        *[F.max(c).alias(c) for c in vals]
+    )
+    return per_batch, vals
+
+
+def read_delta_log(spark, path: str, key_cols: list[str], merge) -> DataFrame:
+    """Merged sketch state from a :func:`delta_log_writer` log: per-batch
+    replay dedup, then `merge` (F.sum for counters, F.max for registers)
+    of every value column across batches, grouped by `key_cols`. The
+    merge is required: folding a MAX log by SUM would silently corrupt
+    it. Returns the key columns plus the delta's value columns, in the
+    delta's dtypes (a sum of int widens to bigint, as F.sum does)."""
+    per_batch, vals = _replay_deduped(spark.read.parquet(path), key_cols, merge)
+    return per_batch.groupBy(*key_cols).agg(*[merge(c).alias(c) for c in vals])
+
+
+def compact_delta_log(spark, path: str, key_cols: list[str], merge) -> None:
+    """Snapshot-compact a :func:`delta_log_writer` directory: fold the
+    whole log — per-batch replay dedup then `merge`, exactly what
+    :func:`read_delta_log` does — into ONE snapshot batch tagged
+    SNAPSHOT_BATCH_ID, and rewrite the directory to just that batch.
+    The reader needs no changes: a snapshot row is just another batch
+    delta to it, so reads after compaction cost O(keys), not
+    O(keys x batches).
+
+    Non-atomic: the rewrite is write-tmp / delete / rename, and a crash
+    in the window loses the log (the sink's upstream outputs are
+    unaffected; rebuild by re-ingesting or restoring the previous
+    snapshot). Run it OUTSIDE the streaming query's replay window (after
+    checkpoint commit): a sum-merged batch replayed AFTER its rows were
+    folded into the snapshot would double-count, since the batch id that
+    dedup-on-read keys on is gone. A transactional table format gives
+    the same fold atomically."""
     import shutil
 
     from pyspark.sql import types as _T
 
     raw = spark.read.parquet(path)
-    vals = [c for c in raw.columns if c not in set(key_cols) | {"batch_id"}]
+    per_batch, vals = _replay_deduped(raw, key_cols, merge)
     # dtype rule (r10, twice-reviewed): the snapshot row must carry the
     # DELTA SCHEMA exactly — a widened snapshot makes the directory
     # unreadable the moment the live sink appends its next narrow delta
     # (measured: mixed INT32/INT64 physical types fail the parquet read
-    # with PARQUET_COLUMN_DATA_TYPE_MISMATCH). So every sum is cast BACK
+    # with PARQUET_COLUMN_DATA_TYPE_MISMATCH). So every fold is cast BACK
     # to its input type (floats keep float, never a blanket bigint that
     # would truncate), and the integral/decimal narrowing is GUARDED: a
     # folded total that outgrew the delta type raises here instead of
     # silently wrapping (int) or nulling (decimal) in the snapshot.
     in_type = {f.name: f.dataType for f in raw.schema.fields}
-    per_batch = raw.groupBy("batch_id", *key_cols).agg(
-        *[F.max(c).alias(c) for c in vals]
-    )
     _INT_MAX = {
         _T.ByteType: 127,
         _T.ShortType: 32767,
@@ -1656,26 +1325,28 @@ def compact_delta_log(spark, path: str, key_cols: list[str]) -> None:
         _T.LongType: 9223372036854775807,
     }
 
-    # Integral and decimal columns are summed as DECIMAL(38, scale), not
+    # Integral and decimal columns are folded as DECIMAL(38, scale), not
     # their native type: F.sum over bigint deltas wraps at the AGGREGATION
     # itself under non-ANSI semantics (and decimal sums null out past
     # precision+10), which would defeat the range check below — the wide
-    # sum keeps the true total so the guard can see it (r10 advice). The
+    # fold keeps the true total so the guard can see it (r10 advice). The
     # narrowing cast back to the delta type happens only after the check.
-    def _sum_expr(c):
+    # A MAX fold never leaves its input range, so the guard cannot fire
+    # for it; both merges take the same path.
+    def _wide_merge(c):
         t = in_type[c]
         if type(t) in _INT_MAX:
-            return F.sum(F.col(c).cast(_T.DecimalType(38, 0))).alias(c)
+            return merge(F.col(c).cast(_T.DecimalType(38, 0))).alias(c)
         if isinstance(t, _T.DecimalType):
-            return F.sum(F.col(c).cast(_T.DecimalType(38, t.scale))).alias(c)
-        return F.sum(c).alias(c)
+            return merge(F.col(c).cast(_T.DecimalType(38, t.scale))).alias(c)
+        return merge(c).alias(c)
 
     guarded = [
         c for c in vals
         if type(in_type[c]) in _INT_MAX or isinstance(in_type[c], _T.DecimalType)
     ]
     merged_wide = per_batch.groupBy(*key_cols).agg(
-        *[_sum_expr(c) for c in vals],
+        *[_wide_merge(c) for c in vals],
         # per-key non-null input counts: distinguish a legitimately-null
         # sum (all inputs null) from a DECIMAL(38) overflow nulled by
         # non-ANSI sum — the one case the wide type itself can't absorb
@@ -1723,20 +1394,5 @@ def compact_delta_log(spark, path: str, key_cols: list[str]) -> None:
     snap = merged.withColumn("batch_id", F.lit(SNAPSHOT_BATCH_ID))
     tmp = path.rstrip("/") + "__compacting"
     snap.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(path)
-    os.rename(tmp, path)
-
-
-def compact_register_log(spark, path: str) -> None:
-    """Snapshot-compact a MAX-merged register log (HLL): rewrite the
-    directory to the merged (scope, reg, rho) table. Max-merge is
-    idempotent, so there is no batch-id machinery to preserve and even a
-    replay straddling the compaction cannot move the sketch — the only
-    caveat is the same non-atomic rewrite window as compact_delta_log."""
-    import shutil
-
-    merged = read_hll_registers(spark, path)
-    tmp = path.rstrip("/") + "__compacting"
-    merged.write.mode("overwrite").parquet(tmp)
     shutil.rmtree(path)
     os.rename(tmp, path)

@@ -41,6 +41,52 @@ def test_compare_is_bit_exact_on_floats():
     assert compare("nan_probe", c.copy(), c.copy()) is None
 
 
+def test_tools_use_only_existing_engine_names():
+    """Every name a tools/ script takes from flinkproject_spark still
+    exists: `from flinkproject_spark.x import y`, and `m.attr` on an
+    engine module the script imported. A deleted engine API otherwise
+    surfaces only when someone next runs the script."""
+    import ast
+    import importlib
+    import pathlib
+    import types
+
+    def resolve(mod, name):
+        if hasattr(mod, name):
+            return getattr(mod, name)
+        try:
+            return importlib.import_module(f"{mod.__name__}.{name}")
+        except ModuleNotFoundError:
+            return None
+
+    missing = []
+    for path in sorted((pathlib.Path(__file__).parent.parent / "tools").glob("*.py")):
+        tree = ast.parse(path.read_text())
+        modules = {}  # local name -> imported engine module
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and (node.module or "").split(".")[0] == "flinkproject_spark":
+                mod = importlib.import_module(node.module)
+                for alias in node.names:
+                    obj = resolve(mod, alias.name)
+                    if obj is None:
+                        missing.append(f"{path.name}: {node.module}.{alias.name}")
+                    elif isinstance(obj, types.ModuleType):
+                        modules[alias.asname or alias.name] = obj
+            elif isinstance(node, ast.Import):
+                for alias in node.names:
+                    if alias.name.split(".")[0] == "flinkproject_spark" and alias.asname:
+                        modules[alias.asname] = importlib.import_module(alias.name)
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Attribute)
+                and isinstance(node.value, ast.Name)
+                and node.value.id in modules
+                and resolve(modules[node.value.id], node.attr) is None
+            ):
+                missing.append(f"{path.name}: {node.value.id}.{node.attr}")
+    assert not missing, missing
+
+
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     rows = df.collect()

@@ -3103,6 +3103,19 @@ def test_kmeans_is_invariant_to_partitioning(tables):
     assert a == b  # int64 math + cid tie-break: no summation-order drift
 
 
+def test_km_parallelize_sizes_percent_encoded_input_paths(spark, tmp_path):
+    """inputFiles() percent-encodes paths (`a%20b`): the size probe must
+    parse the URI, so a tiny file under a directory whose name holds a
+    space keeps its one split instead of silently fanning out to
+    defaultParallelism."""
+    d = str(tmp_path / "a b")
+    spark.range(10).coalesce(1).write.parquet(d)
+    q = spark.read.parquet(d)
+    assert q.rdd.getNumPartitions() == 1 < spark.sparkContext.defaultParallelism
+    assert "%20" in q.inputFiles()[0]
+    assert similarity._km_parallelize(q).rdd.getNumPartitions() == 1
+
+
 def test_kmeans_assign_reuses_persisted_centroids(tables, tmp_path):
     """The production split: fit once, persist the tiny centroid table,
     assign from the stored copy — identical to the in-line path."""

@@ -1320,145 +1320,6 @@ def test_srp_incremental_sink_admits_near_dup_free_corpus(spark, sf_dir, tmp_pat
     assert spark.read.parquet(sig_index).count() == len(ids) * 4
 
 
-def test_srp_incremental_bucketed_layout_parity(spark, sf_dir, tmp_path):
-    """The BucketedParquetIndex layout (VERDICT r07 task 4) must admit
-    EXACTLY the flat layout's corpus over the same batch sequence —
-    pruning only skips index buckets the batch cannot join — across a
-    compaction boundary (compact_every=2 fires mid-sequence)."""
-    emb = catalog.load_table(spark, sf_dir, "embeddings")
-    base = emb.limit(120).localCheckpoint(eager=True)
-    twins = base.filter(F.col("vec_id") < 5).select(
-        (F.col("vec_id") + 900_000).alias("vec_id"), "embedding", "label"
-    )
-    batches = [
-        base.filter(F.col("vec_id") % 3 == i) if i < 3 else twins
-        for i in range(4)
-    ]
-    flat = sinks.srp_incremental_writer(
-        str(tmp_path / "flat_corpus"), str(tmp_path / "flat_sigs")
-    )
-    buck = sinks.srp_incremental_writer(
-        str(tmp_path / "b_corpus"),
-        str(tmp_path / "b_sigs"),
-        index_buckets=8,
-        compact_every=2,
-    )
-    for i, b in enumerate(batches):
-        flat(b, i)
-        buck(b, i)
-    flat_corpus = spark.read.parquet(str(tmp_path / "flat_corpus"))
-    buck_corpus = sinks.BucketedParquetIndex(
-        str(tmp_path / "b_corpus"), ["vec_id"], 8
-    ).read_all(spark)
-    # FULL-ROW parity through the documented reader (read_all drops the
-    # internal pb routing column): same columns, same rows
-    assert sorted(buck_corpus.columns) == sorted(flat_corpus.columns)
-    cols = sorted(flat_corpus.columns)
-    key = lambda df: sorted(
-        tuple(map(repr, r)) for r in df.select(*cols).collect()
-    )
-    assert key(buck_corpus) == key(flat_corpus)
-    got_flat = {r.vec_id for r in flat_corpus.collect()}
-    got_buck = {r.vec_id for r in buck_corpus.collect()}
-    assert got_buck == got_flat
-    # layout really is bucketed: pb= partition dirs on disk, and the
-    # sig index contents (modulo the pb column) match the flat index
-    assert any(d.startswith("pb=") for d in os.listdir(str(tmp_path / "b_sigs")))
-    flat_sigs = {
-        tuple(r)
-        for r in spark.read.parquet(str(tmp_path / "flat_sigs")).collect()
-    }
-    buck_sigs = {
-        tuple(r)
-        for r in spark.read.parquet(str(tmp_path / "b_sigs")).drop("pb").collect()
-    }
-    assert buck_sigs == flat_sigs
-    # compaction left at most one file per bucket directory
-    for d in os.listdir(str(tmp_path / "b_sigs")):
-        if d.startswith("pb="):
-            parts = [
-                f
-                for f in os.listdir(str(tmp_path / "b_sigs" / d))
-                if f.endswith(".parquet")
-            ]
-            assert len(parts) <= 1 + 1  # compacted file + at most 1 newer batch
-
-
-def test_span_incremental_bucketed_layout_parity(spark, sf_dir, tmp_path):
-    """Span sink parity across layouts: identical detected spans and
-    identical gram-index row sets over a multi-batch run with a
-    re-ingested document (exercising the anti-join hygiene against a
-    PRUNED index read)."""
-    docs = catalog.load_table(spark, sf_dir, "documents").limit(90)
-    batches = [docs.filter(F.col("doc_id") % 3 == i) for i in range(3)]
-    # clones under new ids guarantee cross-document spans in the last
-    # batch; plus a genuine re-ingest exercising the anti-join hygiene
-    batches.append(
-        batches[0].limit(10).withColumn("doc_id", F.col("doc_id") + 1_000_000)
-        .unionByName(batches[1].limit(5))
-    )
-    flat = sinks.span_incremental_writer(
-        str(tmp_path / "flat_idx"), str(tmp_path / "flat_spans")
-    )
-    buck = sinks.span_incremental_writer(
-        str(tmp_path / "b_idx"),
-        str(tmp_path / "b_spans"),
-        index_buckets=8,
-        compact_every=2,
-    )
-    for i, b in enumerate(batches):
-        flat(b, i)
-        buck(b, i)
-    got_flat = sorted(
-        tuple(r) for r in sinks.read_spans(spark, str(tmp_path / "flat_spans")).collect()
-    )
-    got_buck = sorted(
-        tuple(r) for r in sinks.read_spans(spark, str(tmp_path / "b_spans")).collect()
-    )
-    assert got_buck == got_flat
-    flat_idx = {
-        tuple(r) for r in spark.read.parquet(str(tmp_path / "flat_idx")).collect()
-    }
-    buck_idx = {
-        tuple(r)
-        for r in spark.read.parquet(str(tmp_path / "b_idx")).drop("pb").collect()
-    }
-    assert buck_idx == flat_idx
-    assert any(d.startswith("pb=") for d in os.listdir(str(tmp_path / "b_idx")))
-
-    # crash-replay under the BUCKETED layout: re-running the last batch
-    # under its batch_id must leave served spans unchanged (read_spans
-    # collapses the re-appended rows) and the gram index row set intact
-    # (anti-join hygiene against the PRUNED read)
-    buck(batches[-1], len(batches) - 1)
-    assert sorted(
-        tuple(r) for r in sinks.read_spans(spark, str(tmp_path / "b_spans")).collect()
-    ) == got_buck
-    assert {
-        tuple(r)
-        for r in spark.read.parquet(str(tmp_path / "b_idx")).drop("pb").collect()
-    } == flat_idx
-
-
-def test_bucketed_index_refuses_flat_store_and_skips_empty_compaction(
-    spark, tmp_path
-):
-    """Layout guards: read_pruned on a FLAT-layout path raises a clear
-    error (a silent full-scan read would corrupt the layout on the next
-    append); compaction on a never-written path is a no-op."""
-    import pytest as _pytest
-
-    flat = spark.createDataFrame([(1, "x")], "k bigint, v string")
-    flat.write.mode("overwrite").parquet(str(tmp_path / "flatstore"))
-    store = sinks.BucketedParquetIndex(str(tmp_path / "flatstore"), ["k"], 8)
-    with _pytest.raises(ValueError, match="FLAT layout"):
-        store.read_pruned(spark, flat)
-
-    empty = sinks.BucketedParquetIndex(str(tmp_path / "neverwritten"), ["k"], 8)
-    empty.maybe_compact(spark, batch_id=7)  # (7+1) % 8 == 0 -> would fire
-    assert not os.path.exists(str(tmp_path / "neverwritten"))
-
-
 def test_incremental_dedup_sink_admits_exactly_the_keepers(spark, sf_dir, tmp_path):
     """Documents streamed in doc_id order through the incremental-dedup
     sink: the admitted corpus must equal the batch exact-dedup keeper set
@@ -1680,7 +1541,7 @@ def test_cms_incremental_counters_merge_and_survive_replay(spark, sf_dir, tmp_pa
         for i in range(3)
     ]
     counters_path = str(tmp_path / "cms")
-    fn = sinks.cms_incremental_writer(counters_path)
+    fn = sinks.delta_log_writer(counters_path, relational.cms_counters)
     fn(chunks[0], 0)
     fn(chunks[0], 0)  # replayed batch: same id, same deterministic deltas
     fn(chunks[1], 1)
@@ -1688,7 +1549,9 @@ def test_cms_incremental_counters_merge_and_survive_replay(spark, sf_dir, tmp_pa
 
     merged = {
         (r.i, r.bucket): r.c
-        for r in sinks.read_cms_counters(spark, counters_path).collect()
+        for r in sinks.read_delta_log(
+            spark, counters_path, ["i", "bucket"], F.sum
+        ).collect()
     }
     # one-shot batch sketch over the full table (rebuild the counter
     # table the same way the operator does internally)
@@ -2226,8 +2089,7 @@ def test_cep_stream_state_ttl_wiring_preserves_results(spark, events, staged):
 def test_hll_incremental_registers_merge_and_survive_replay(spark, sf_dir, tmp_path):
     """Streaming HLL == batch HLL under crash replay: events streamed in
     three chunks with the first batch re-invoked (retry before checkpoint
-    commit). MAX-merge is idempotent, so no batch-id/dedup machinery is
-    needed — the merged registers, and therefore the estimates, must
+    commit). The merged registers, and therefore the estimates, must
     equal the one-shot batch sketch exactly."""
     from flinkproject_spark.operators import relational
 
@@ -2237,13 +2099,13 @@ def test_hll_incremental_registers_merge_and_survive_replay(spark, sf_dir, tmp_p
         for i in range(3)
     ]
     path = str(tmp_path / "hll")
-    fn = sinks.hll_incremental_writer(path)
+    fn = sinks.delta_log_writer(path, relational.hll_registers)
     fn(chunks[0], 0)
     fn(chunks[0], 0)  # replayed batch: identical register rows, MAX absorbs
     fn(chunks[1], 1)
     fn(chunks[2], 2)
 
-    merged = sinks.read_hll_registers(spark, path)
+    merged = sinks.read_delta_log(spark, path, ["scope", "reg"], F.max)
     want_regs = {
         (r.scope, r.reg): r.rho for r in relational.hll_registers(events).collect()
     }
@@ -2280,13 +2142,15 @@ def test_histq_incremental_counters_merge_and_survive_replay(
         for i in range(3)
     ]
     path = str(tmp_path / "histq")
-    fn = sinks.histq_incremental_writer(path, lo, hi)
+    fn = sinks.delta_log_writer(
+        path, lambda b: relational.histq_bin_deltas(b, lo, hi)
+    )
     fn(chunks[0], 0)
     fn(chunks[0], 0)  # replayed batch: identical deltas, dedup-on-read absorbs
     fn(chunks[1], 1)
     fn(chunks[2], 2)
 
-    merged = sinks.read_histq_counters(spark, path)
+    merged = sinks.read_delta_log(spark, path, ["scope", "bin"], F.sum)
     got = {
         r.scope: (r.n, r.q50_edge, r.q90_edge, r.q99_edge)
         for r in relational.histq_quantiles_from_counters(merged, lo, hi).collect()
@@ -2305,75 +2169,57 @@ def test_histq_incremental_counters_merge_and_survive_replay(
     row["value"] = (hi + 1000) / 1000.0 * 2  # beyond the pinned domain
     extra = spark.createDataFrame([row], schema)
     fn(extra, 3)
-    bins = sinks.read_histq_counters(spark, path).select("bin").distinct()
+    bins = sinks.read_delta_log(spark, path, ["scope", "bin"], F.sum).select(
+        "bin"
+    ).distinct()
     assert bins.agg(F.max("bin")).first()[0] <= 255
 
 
 def test_delta_log_compaction_is_invisible_to_readers(spark, sf_dir, tmp_path):
     """Snapshot compaction folds the log into one batch without moving a
-    value: for each delta sink (CMS sum-merge, histogram sum-merge, Gram
+    value: for each sketch (CMS sum-merge, histogram sum-merge, Gram
     sum-merge, HLL max-merge), ingest some batches, compact, ingest MORE
     batches, and the reader must return exactly what the uncompacted
     twin returns — while the compacted directory holds one snapshot
     batch plus only the post-compaction deltas."""
+    from flinkproject_spark.operators import relational, similarity
+
     events = catalog.load_table(spark, sf_dir, "events")
-    chunks = [
-        events.filter(F.pmod("event_id", F.lit(4)) == i).localCheckpoint(eager=True)
-        for i in range(4)
-    ]
-    # --- CMS (sum-merged, batch-id dedup) ---
-    a, b = str(tmp_path / "cms_a"), str(tmp_path / "cms_b")
-    fa, fb = sinks.cms_incremental_writer(a), sinks.cms_incremental_writer(b)
-    for i in range(2):
-        fa(chunks[i], i), fb(chunks[i], i)
-    sinks.compact_delta_log(spark, a, ["i", "bucket"])
-    for i in range(2, 4):
-        fa(chunks[i], i), fb(chunks[i], i)
-    ga = {(r.i, r.bucket): r.c for r in sinks.read_cms_counters(spark, a).collect()}
-    gb = {(r.i, r.bucket): r.c for r in sinks.read_cms_counters(spark, b).collect()}
-    assert ga == gb
-    ids = {r.batch_id for r in spark.read.parquet(a).select("batch_id").distinct().collect()}
-    assert ids == {sinks.SNAPSHOT_BATCH_ID, 2, 3}
-    # --- histogram quantile counters (sum-merged) ---
+    emb = catalog.load_table(spark, sf_dir, "embeddings")
     q = F.round(F.col("value").cast("double") * F.lit(1000.0), 0).cast("bigint")
     lo, hi = events.select(F.min(q), F.max(q)).first()
-    a, b = str(tmp_path / "hq_a"), str(tmp_path / "hq_b")
-    fa = sinks.histq_incremental_writer(a, lo, hi)
-    fb = sinks.histq_incremental_writer(b, lo, hi)
-    for i in range(2):
-        fa(chunks[i], i), fb(chunks[i], i)
-    sinks.compact_delta_log(spark, a, ["scope", "bin"])
-    for i in range(2, 4):
-        fa(chunks[i], i), fb(chunks[i], i)
-    ga = {(r.scope, r.bin): r.c for r in sinks.read_histq_counters(spark, a).collect()}
-    gb = {(r.scope, r.bin): r.c for r in sinks.read_histq_counters(spark, b).collect()}
-    assert ga == gb
-    # --- Gram partials (sum-merged) ---
-    emb = catalog.load_table(spark, sf_dir, "embeddings")
-    echunks = [
-        emb.filter(F.pmod("vec_id", F.lit(3)) == i).localCheckpoint(eager=True)
-        for i in range(3)
+
+    def chunked(df, key):
+        return [
+            df.filter(F.pmod(key, F.lit(4)) == i).localCheckpoint(eager=True)
+            for i in range(4)
+        ]
+
+    ev_chunks = chunked(events, "event_id")
+    sketches = [
+        ("cms", relational.cms_counters, ["i", "bucket"], F.sum, ev_chunks),
+        ("hq", lambda b: relational.histq_bin_deltas(b, lo, hi),
+         ["scope", "bin"], F.sum, ev_chunks),
+        ("gr", lambda b: similarity.embedding_gram(b).drop("cov"),
+         ["i", "j"], F.sum, chunked(emb, "vec_id")),
+        ("hll", relational.hll_registers, ["scope", "reg"], F.max, ev_chunks),
     ]
-    a, b = str(tmp_path / "gr_a"), str(tmp_path / "gr_b")
-    fa, fb = sinks.gram_incremental_writer(a), sinks.gram_incremental_writer(b)
-    fa(echunks[0], 0), fb(echunks[0], 0)
-    fa(echunks[1], 1), fb(echunks[1], 1)
-    sinks.compact_delta_log(spark, a, ["i", "j"])
-    fa(echunks[2], 2), fb(echunks[2], 2)
-    ga = sorted(map(tuple, sinks.read_gram(spark, a).collect()))
-    gb = sorted(map(tuple, sinks.read_gram(spark, b).collect()))
-    assert ga == gb
-    # --- HLL registers (max-merged) ---
-    a, b = str(tmp_path / "hll_a"), str(tmp_path / "hll_b")
-    fa, fb = sinks.hll_incremental_writer(a), sinks.hll_incremental_writer(b)
-    for i in range(2):
-        fa(chunks[i], i), fb(chunks[i], i)
-    sinks.compact_register_log(spark, a)
-    for i in range(2, 4):
-        fa(chunks[i], i), fb(chunks[i], i)
-    ga = {(r.scope, r.reg): r.rho for r in sinks.read_hll_registers(spark, a).collect()}
-    gb = {(r.scope, r.reg): r.rho for r in sinks.read_hll_registers(spark, b).collect()}
-    assert ga == gb
+    for name, delta, keys, merge, chunks in sketches:
+        a, b = str(tmp_path / f"{name}_a"), str(tmp_path / f"{name}_b")
+        fa, fb = sinks.delta_log_writer(a, delta), sinks.delta_log_writer(b, delta)
+        for i in range(2):
+            fa(chunks[i], i), fb(chunks[i], i)
+        sinks.compact_delta_log(spark, a, keys, merge)
+        for i in range(2, 4):
+            fa(chunks[i], i), fb(chunks[i], i)
+        ga = sorted(map(tuple, sinks.read_delta_log(spark, a, keys, merge).collect()))
+        gb = sorted(map(tuple, sinks.read_delta_log(spark, b, keys, merge).collect()))
+        assert ga == gb, name
+        ids = {
+            r.batch_id
+            for r in spark.read.parquet(a).select("batch_id").distinct().collect()
+        }
+        assert ids == {sinks.SNAPSHOT_BATCH_ID, 2, 3}, name
 
 
 def test_kmeans_assigning_writer_matches_batch_and_survives_replay(
@@ -2420,14 +2266,14 @@ def test_zorder_compacting_writer_windows_replay_and_prune(spark, tmp_path):
         (F.col("id") / 64).cast("bigint").alias("y"),
     ).localCheckpoint(eager=True)
     base = str(tmp_path / "zstore")
-    fn = sinks.zorder_compacting_writer(base, ["x", "y"], bits=6,
-                                        window_batches=4, n_files=4)
+    assert sinks.ZORDER_WINDOW_BATCHES == 4  # 8 batches -> 2 closed windows
+    fn = sinks.zorder_compacting_writer(base, ["x", "y"], bits=6, n_files=4)
     for b in range(8):
         chunk = grid.filter(F.pmod(F.col("x") + F.col("y") * 7, F.lit(8)) == b)
         fn(chunk.localCheckpoint(eager=True), b)
         if b == 3:
             fn(chunk.localCheckpoint(eager=True), b)  # replay the compactor
-    got = sinks.read_zordered(spark, base, upto_batch=7, window_batches=4)
+    got = sinks.read_zordered(spark, base, upto_batch=7)
     assert sorted(map(tuple, got.collect())) == sorted(map(tuple, grid.collect()))
     for w in (0, 1):
         rs = layout.file_ranges(f"{base}/zorder/window={w}", ["x", "y"])
@@ -2449,7 +2295,9 @@ def test_gram_incremental_deltas_merge_and_survive_replay(spark, sf_dir, tmp_pat
 
     emb = catalog.load_table(spark, sf_dir, "embeddings")
     path = str(tmp_path / "gram")
-    fn = sinks.gram_incremental_writer(path)
+    fn = sinks.delta_log_writer(
+        path, lambda b: similarity.embedding_gram(b).drop("cov")
+    )
     chunks = [
         emb.filter(F.pmod("vec_id", F.lit(3)) == i).localCheckpoint(eager=True)
         for i in range(3)
@@ -2460,7 +2308,7 @@ def test_gram_incremental_deltas_merge_and_survive_replay(spark, sf_dir, tmp_pat
     fn(chunks[2], 2)
     got = {
         (r.i, r.j): (r.sxy, r.sx, r.sy, r.n)
-        for r in sinks.read_gram(spark, path).collect()
+        for r in sinks.read_delta_log(spark, path, ["i", "j"], F.sum).collect()
     }
     want = {
         (r.i, r.j): (r.sxy, r.sx, r.sy, r.n)
@@ -2633,7 +2481,7 @@ def test_compact_delta_log_keeps_delta_schema_and_guards_overflow(
         rows, "batch_id int, k string, fval double, ival int"
     )
     df.write.mode("append").parquet(path)
-    sinks.compact_delta_log(spark, path, key_cols=["k"])
+    sinks.compact_delta_log(spark, path, ["k"], F.sum)
     out = spark.read.parquet(path)
     assert dict(out.dtypes)["fval"] == "double"
     assert dict(out.dtypes)["ival"] == "int"  # delta schema preserved
@@ -2654,7 +2502,7 @@ def test_compact_delta_log_keeps_delta_schema_and_guards_overflow(
         "batch_id int, k string, ival int",
     ).write.mode("append").parquet(path2)
     with _pytest.raises(ValueError, match="type range"):
-        sinks.compact_delta_log(spark, path2, key_cols=["k"])
+        sinks.compact_delta_log(spark, path2, ["k"], F.sum)
 
     # bigint overflow (r10 advice): a native F.sum over bigint deltas
     # WRAPS at the aggregation itself under non-ANSI semantics before any
@@ -2666,17 +2514,32 @@ def test_compact_delta_log_keeps_delta_schema_and_guards_overflow(
         "batch_id int, k string, lval long",
     ).write.mode("append").parquet(path3)
     with _pytest.raises(ValueError, match="type range"):
-        sinks.compact_delta_log(spark, path3, key_cols=["k"])
+        sinks.compact_delta_log(spark, path3, ["k"], F.sum)
     # and an in-range bigint column still compacts exactly
     path4 = str(tmp_path / "dl4")
     spark.createDataFrame(
         [(0, "a", 4_000_000_000_000_000_000), (1, "a", 4_000_000_000_000_000_000)],
         "batch_id int, k string, lval long",
     ).write.mode("append").parquet(path4)
-    sinks.compact_delta_log(spark, path4, key_cols=["k"])
+    sinks.compact_delta_log(spark, path4, ["k"], F.sum)
     out4 = spark.read.parquet(path4)
     assert dict(out4.dtypes)["lval"] == "bigint"
     assert out4.first().lval == 8_000_000_000_000_000_000
+
+    # a MAX-merged log takes the same guarded path: the snapshot keeps the
+    # delta schema and folds each key to its max
+    path5 = str(tmp_path / "dl5")
+    df.write.mode("append").parquet(path5)
+    sinks.compact_delta_log(spark, path5, ["k"], F.max)
+    out5 = spark.read.parquet(path5)
+    assert dict(out5.dtypes)["fval"] == "double"
+    assert dict(out5.dtypes)["ival"] == "int"
+    assert {r.k: (r.fval, r.ival) for r in out5.collect()} == {
+        "a": (1.5, 100), "b": (2.25, 5)
+    }
+    # no other fold is accepted: the caller names F.sum or F.max
+    with _pytest.raises(ValueError, match="F.sum or F.max"):
+        sinks.read_delta_log(spark, path5, ["k"], F.min)
 
 
 def test_compact_delta_log_accepts_exact_type_min(spark, tmp_path):
@@ -2692,7 +2555,7 @@ def test_compact_delta_log_accepts_exact_type_min(spark, tmp_path):
          (1, "a", -147_483_648, -4_611_686_018_427_387_904)],
         "batch_id int, k string, ival int, lval long",
     ).write.mode("append").parquet(path)
-    sinks.compact_delta_log(spark, path, key_cols=["k"])
+    sinks.compact_delta_log(spark, path, ["k"], F.sum)
     row = spark.read.parquet(path).first()
     assert row.ival == -(2**31)  # exactly int min, accepted
     assert row.lval == -(2**63)  # exactly long min, accepted
@@ -2702,4 +2565,4 @@ def test_compact_delta_log_accepts_exact_type_min(spark, tmp_path):
         "batch_id int, k string, ival int",
     ).write.mode("append").parquet(path2)
     with _pytest.raises(ValueError, match="type range"):
-        sinks.compact_delta_log(spark, path2, key_cols=["k"])
+        sinks.compact_delta_log(spark, path2, ["k"], F.sum)

@@ -12,11 +12,12 @@ catch; anything above SUPERLINEAR_GATE is flagged for a plan fix).
 Scale-up construction (per-table, all deterministic, replica r of 10):
 
 - documents: DISJOINT replication — replica r prefixes every word with
-  ``r<r>_`` (bench_pr_scale's shape): doc count and token volume scale
-  10x while the per-shingle df distribution stays exactly sf0.1's, so
-  dedup pair counts grow linearly, not quadratically. Verbatim copies
-  would measure workload blowup (every doc gaining 9 clones), not
-  engine scaling. n_chars is recomputed from the transformed text.
+  ``r<r>_`` (BENCH_PR_SCALE.md's disjoint-10x shape): doc count and
+  token volume scale 10x while the per-shingle df distribution stays
+  exactly sf0.1's, so dedup pair counts grow linearly, not
+  quadratically. Verbatim copies would measure workload blowup (every
+  doc gaining 9 clones), not engine scaling. n_chars is recomputed
+  from the transformed text.
 - embeddings: per-replica deterministic sign mask (replica 0 =
   original) — replicas are mutually ~orthogonal so LSH/IVF bucket
   occupancy scales 10x without creating 9 exact clones per vector.
