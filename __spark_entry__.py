@@ -1531,6 +1531,7 @@ def q_ivf_pq_recall_report(spark, sf):
     the composition trades for its cell-pruned compressed scan (the
     same report shape as ann_recall_report / pq_recall_report, both
     pipelines DuckDB-reproducible)."""
+    import uuid
     from concurrent.futures import ThreadPoolExecutor
 
     emb = _t(spark, sf, "embeddings")
@@ -1549,11 +1550,25 @@ def q_ivf_pq_recall_report(spark, sf):
     exact = similarity.cosine_topk_vectorized(
         emb, QUERY_IDS
     ).localCheckpoint(eager=False)
+    # The exact arm runs under its own job group, so a failing fit
+    # cancels it (and any job it has yet to submit) and raises at once,
+    # instead of waiting out the whole exact pass at the pool's exit.
+    sc = spark.sparkContext
+    group = f"ivf_pq_recall_report.exact.{uuid.uuid4().hex}"
+
+    def count_exact() -> int:
+        sc.setJobGroup(group, "ivf_pq_recall_report: exact arm", interruptOnCancel=True)
+        return exact.count()
+
     with ThreadPoolExecutor(max_workers=1) as pool:
-        f_exact = pool.submit(exact.count)
-        # centroids=None for the same single-aggregate reason as
-        # q_sim_topk_ivf_pq; identical fit parameters, identical output
-        approx = similarity.ivf_pq_topk(emb, QUERY_IDS, normed=e)
+        f_exact = pool.submit(count_exact)
+        try:
+            # centroids=None for the same single-aggregate reason as
+            # q_sim_topk_ivf_pq; identical fit parameters, identical output
+            approx = similarity.ivf_pq_topk(emb, QUERY_IDS, normed=e)
+        except BaseException:
+            sc._jsc.sc().cancelJobGroupAndFutureJobs(group)
+            raise
         f_exact.result()  # surface any exact-arm failure loudly
     out = similarity.recall_at_k(approx, exact, k=10)
     return out.select("query_id", F.round("recall", 6).alias("recall"))

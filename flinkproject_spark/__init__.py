@@ -16,6 +16,3 @@ Every public operator documents the reference behavior it reproduces with
 """
 
 __version__ = "0.1.0"
-
-from flinkproject_spark.session import get_spark  # noqa: F401
-from flinkproject_spark.catalog import load_table, load_tables, register_views  # noqa: F401

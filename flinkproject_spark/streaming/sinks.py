@@ -858,7 +858,7 @@ def span_incremental_writer(
     IDENTICAL rows (grams, index matches and nd counts are all
     deterministic; the gram index itself is replay-safe via the
     anti-join below, so the replay sees the same effective index) —
-    read the log with :func:`read_spans`, which collapses the duplicate
+    read the log with :func:`read_batch_log`, which collapses the duplicate
     (batch_id, span) rows the way :func:`read_delta_log` does for sketch
     deltas. Same doc re-ingested in a LATER batch keeps both
     annotations (different batch_id — a real second ingest event).
@@ -915,16 +915,15 @@ def span_incremental_writer(
     return fn
 
 
-def read_spans(spark, spans_path: str) -> DataFrame:
-    """Span annotations from the batch-tagged log written by
-    :func:`span_incremental_writer`: drop crash-replay duplicates — a
-    replayed batch appends byte-identical rows under the SAME batch_id,
-    so a full-row distinct collapses exactly those — then project the
-    batch_id tag away. Rows repeated across DIFFERENT batch_ids survive
-    (a document genuinely re-ingested later is a second annotation
-    event). Mirrors :func:`read_delta_log`'s append-with-id +
-    dedup-on-read discipline (ADVICE r07)."""
-    return spark.read.parquet(spans_path).distinct().drop("batch_id")
+def read_batch_log(spark, path: str) -> DataFrame:
+    """Rows of a batch-tagged append log (the span and assignment sinks):
+    drop crash-replay duplicates — a replayed batch appends byte-identical
+    rows under the SAME batch_id, so a full-row distinct collapses exactly
+    those — then project the batch_id tag away. Rows repeated across
+    DIFFERENT batch_ids survive (a document genuinely re-ingested later is
+    a second annotation event). Mirrors :func:`read_delta_log`'s
+    append-with-id + dedup-on-read discipline (ADVICE r07)."""
+    return spark.read.parquet(path).distinct().drop("batch_id")
 
 
 def _scoring_split_writer(
@@ -1136,7 +1135,7 @@ def kmeans_assigning_writer(
 
     Idempotency: assignment is deterministic, so a crash-replayed batch
     appends byte-identical rows under the SAME batch_id; read with
-    :func:`read_assignments` (full-row distinct, then drop the tag) —
+    :func:`read_batch_log` (full-row distinct, then drop the tag) —
     the span-log discipline. Re-training writes NEW centroids under a
     new path/version; assignments are per-version by construction.
     """
@@ -1150,12 +1149,6 @@ def kmeans_assigning_writer(
         ).write.mode("append").parquet(assignments_path)
 
     return fn
-
-
-def read_assignments(spark, assignments_path: str) -> DataFrame:
-    """Merged (vec_id, cid, d2) assignments from the batch-tagged log,
-    crash-replay duplicates collapsed by full-row distinct."""
-    return spark.read.parquet(assignments_path).distinct().drop("batch_id")
 
 
 # Batches per z-ordered window. The writer closes a window and the reader

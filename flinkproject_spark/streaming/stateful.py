@@ -22,6 +22,15 @@ Mechanics shared by all three:
 - the replay heartbeat key (replay.HEARTBEAT_ID) is skipped so sentinel rows
   advance the watermark without polluting output.
 
+Per-key cost: Spark calls the function once per key and trigger, and
+most keys in a trigger carry one row, so work per call sets capacity.
+`fix_is_new_flag_stream` and `unique_visits_stream` pass `ts` in as epoch
+micros (pyspark localises a timestamp column for every key), format it in
+the JVM after the operator instead of a per-key `strftime`, skip the
+concat and sort for one chunk or one row, and write state only when it
+changes. What is left per key is Spark's own Arrow framing and state
+access.
+
 Scale posture: state is sharded by the group key across executors (HDFS/
 RocksDB-backed state store on a real cluster); per-key state here is O(1)
 (a flag, a date, one pending event) so 10^9 keys is ~GBs cluster-wide, and
@@ -30,10 +39,13 @@ every timer is watermark-bounded so state cannot grow without bound.
 
 from __future__ import annotations
 
+from datetime import date
 from typing import Any, Iterator
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from flinkproject_spark.streaming.replay import HEARTBEAT_ID
@@ -41,12 +53,31 @@ from flinkproject_spark.streaming.replay import HEARTBEAT_ID
 _TS_FMT = "%Y-%m-%d %H:%M:%S"
 
 
-def _ordered(pdfs: Iterator[pd.DataFrame]) -> pd.DataFrame:
-    chunks = [p for p in pdfs]
-    pdf = pd.concat(chunks, ignore_index=True) if chunks else pd.DataFrame()
-    if len(pdf):
-        pdf = pdf.sort_values(["ts", "event_id"], kind="mergesort").reset_index(drop=True)
+def _ordered(pdfs: Iterator[pd.DataFrame], ts: str = "ts") -> pd.DataFrame:
+    """One key's rows in (ts, event_id) order; most keys arrive as one
+    chunk of one row, which needs neither the concat nor the sort."""
+    chunks = list(pdfs)
+    if not chunks:
+        return pd.DataFrame()
+    pdf = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
+    if len(pdf) > 1:
+        pdf = pdf.sort_values([ts, "event_id"], kind="mergesort", ignore_index=True)
     return pdf
+
+
+def _with_ts_us(events: DataFrame, *cols: str) -> DataFrame:
+    """`events` projected to `cols`, with `ts` as epoch micros in `ts_us`:
+    a bigint crosses into pandas as is, where a timestamp is localised for
+    every key. `ts_us` keeps `ts`'s watermark metadata, so EventTimeTimeout
+    still finds its watermark and still drops late rows (`ts_us` compares
+    with the watermark in micros, as a timestamp does)."""
+    ts_us = F.unix_micros("ts").alias("ts_us", metadata=events.schema["ts"].metadata)
+    return events.select("event_id", ts_us, *cols)
+
+
+def _ts_string() -> Column:
+    """`ts_us` formatted in the JVM, as the per-key strftime did in pandas."""
+    return F.date_format(F.timestamp_micros("ts_us"), "yyyy-MM-dd HH:mm:ss")
 
 
 def _ts_ms(series: pd.Series) -> pd.Series:
@@ -68,31 +99,23 @@ def fix_is_new_flag_stream(events: DataFrame) -> DataFrame:
     def fn(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
         if key[0] == HEARTBEAT_ID:
             return
-        pdf = _ordered(pdfs)
+        pdf = _ordered(pdfs, "ts_us")
         if not len(pdf):
             return
-        seen = state.get[0] if state.exists else False
-        flags = [0] * len(pdf)
-        if not seen:
-            flags[0] = 1
-        state.update((True,))
-        yield pd.DataFrame(
-            {
-                "event_id": pdf["event_id"],
-                "ts": pdf["ts"].dt.strftime(_TS_FMT),
-                "user_id": pdf["user_id"],
-                "event_type": pdf["event_type"],
-                "is_new": pd.Series(flags, dtype="int64"),
-            }
-        )
+        is_new = np.zeros(len(pdf), dtype="int64")
+        if not state.exists:
+            is_new[0] = 1
+            state.update((True,))
+        yield pdf.assign(is_new=is_new)
 
-    return events.groupBy("user_id").applyInPandasWithState(
+    flagged = _with_ts_us(events, "user_id", "event_type").groupBy("user_id").applyInPandasWithState(
         fn,
-        outputStructType="event_id bigint, ts string, user_id bigint, event_type string, is_new bigint",
+        outputStructType="event_id bigint, ts_us bigint, user_id bigint, event_type string, is_new bigint",
         stateStructType="seen boolean",
         outputMode="append",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
+    return flagged.select("event_id", _ts_string().alias("ts"), "user_id", "event_type", "is_new")
 
 
 def enrich_is_new_stream(events: DataFrame) -> DataFrame:
@@ -163,8 +186,12 @@ def unique_visits_stream(events: DataFrame, ttl_hours: int = 24) -> DataFrame:
     `last_dt` string is complete state. TTL eviction is behavior-preserving
     here (a >24 h gap always lands on a later calendar day — SURVEY §7
     delta #5) but keeps unbounded-key state from accumulating forever.
+    The day is computed in the JVM (`unix_date`, session time zone) and
+    compared in pandas as an integer; `ts` and `dt` are formatted from
+    `ts_us` and that day in the JVM after the operator.
     """
     ttl_ms = ttl_hours * 3600 * 1000
+    epoch = date(1970, 1, 1).toordinal()
 
     def fn(key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
         if key[0] == HEARTBEAT_ID:
@@ -172,35 +199,28 @@ def unique_visits_stream(events: DataFrame, ttl_hours: int = 24) -> DataFrame:
         if state.hasTimedOut:
             state.remove()  # A14: TTL eviction
             return
-        pdf = _ordered(pdfs)
+        pdf = _ordered(pdfs, "ts_us")
         if not len(pdf):
             return
-        last_dt = state.get[0] if state.exists else None
-        dts = pdf["ts"].dt.strftime("%Y-%m-%d")
-        keep = []
-        for dt in dts:
-            keep.append(last_dt is None or dt > last_dt)
-            last_dt = dt if last_dt is None else max(last_dt, dt)
-        last_ms = int(_ts_ms(pdf["ts"]).iloc[-1])
-        state.update((last_dt,))
-        _safe_timeout(state, last_ms + ttl_ms)
-        out = pdf[pd.Series(keep, index=pdf.index)]
-        yield pd.DataFrame(
-            {
-                "event_id": out["event_id"],
-                "ts": out["ts"].dt.strftime(_TS_FMT),
-                "user_id": out["user_id"],
-                "dt": out["ts"].dt.strftime("%Y-%m-%d"),
-                "event_type": out["event_type"],
-            }
-        )
+        day = pdf["day"].to_numpy()
+        last = date.fromisoformat(state.get[0]).toordinal() - epoch if state.exists else day[0] - 1
+        seen = np.maximum.accumulate(np.concatenate(([last], day)))
+        if seen[-1] > last:
+            state.update((date.fromordinal(int(seen[-1]) + epoch).isoformat(),))
+        _safe_timeout(state, int(pdf["ts_us"].iloc[-1]) // 1000 + ttl_ms)
+        yield pdf[day > seen[:-1]]
 
-    return events.groupBy("user_id").applyInPandasWithState(
+    daily = _with_ts_us(events, "user_id", "event_type", F.unix_date(F.to_date("ts")).alias("day"))
+    kept = daily.groupBy("user_id").applyInPandasWithState(
         fn,
-        outputStructType="event_id bigint, ts string, user_id bigint, dt string, event_type string",
+        outputStructType="event_id bigint, ts_us bigint, user_id bigint, event_type string, day int",
         stateStructType="last_dt string",
         outputMode="append",
         timeoutConf=GroupStateTimeout.EventTimeTimeout,
+    )
+    return kept.select(
+        "event_id", _ts_string().alias("ts"), "user_id", F.date_from_unix_date("day").cast("string").alias("dt"),
+        "event_type",
     )
 
 
@@ -400,8 +420,6 @@ def cep_pattern_stream(
     the session gap). Default None = keep (the reference's keyed state is
     also unexpiring for this operator, UserJumpDetailApp.java:68-92).
     """
-    import numpy as np
-
     from flinkproject_spark.operators import cep
 
     events, steps, is_sql = cep._compile_steps(events, steps)
@@ -470,8 +488,6 @@ def detect_bounces_cep_stream(
     """A12 as a `cep_pattern_stream` instance — begin(entry).next(entry)
     .within(bounce_gap), both branches projecting the first step's event.
     Replay-parity with the oracle-checked batch twins is pinned by test."""
-    from pyspark.sql import functions as F
-
     from flinkproject_spark.operators import cep
 
     entry = cep.session_entry_pred(session_gap_min)

@@ -94,6 +94,31 @@ def test_entry_smoke(spark):
     assert set(df.columns) == {"stt", "edt", "province_id", "province_name", "order_amount", "order_count"}
 
 
+def test_ivf_pq_recall_report_fit_failure_cancels_exact_arm(spark, sf_dir, monkeypatch):
+    """A fit that raises must surface at once: the exact arm runs on a side
+    thread under its own job group, which the failure cancels, rather than
+    being waited out when the thread pool closes."""
+    import time
+
+    from pyspark.sql import functions as F
+
+    def slow_exact(emb, query_ids):
+        # 4 tasks of 10 rows x 3 s: the exact arm alone takes 30 s
+        stall = F.udf(lambda _: time.sleep(3.0) is None, "boolean")
+        return emb.sparkSession.range(0, 40, 1, 4).where(stall("id"))
+
+    def failing_fit(emb, query_ids, normed):
+        time.sleep(2.0)  # the exact arm's job is running by now
+        raise RuntimeError("fit failed")
+
+    monkeypatch.setattr(entrymod.similarity, "cosine_topk_vectorized", slow_exact)
+    monkeypatch.setattr(entrymod.similarity, "ivf_pq_topk", failing_fit)
+    t0 = time.perf_counter()
+    with pytest.raises(RuntimeError, match="fit failed"):
+        entrymod.q_ivf_pq_recall_report(spark, sf_dir)
+    assert time.perf_counter() - t0 < 15.0
+
+
 def test_every_query_has_oracle_or_is_declared():
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()

@@ -140,12 +140,68 @@ def test_is_new_flag_stream_matches_batch(spark, events, staged):
     assert _sorted_rows(got, cols) == _sorted_rows(want, cols)
 
 
+def test_keyed_state_streams_keep_their_output_schema(spark, staged):
+    """`ts` crosses into pandas as epoch micros and is formatted back in
+    the JVM; the public output schemas stay as they were."""
+    wm = jobs.watermarked_events(_stream(spark, staged), delay="1 minute")
+    assert stateful.fix_is_new_flag_stream(wm).schema.simpleString() == (
+        "struct<event_id:bigint,ts:string,user_id:bigint,event_type:string,is_new:bigint>"
+    )
+    assert stateful.unique_visits_stream(wm).schema.simpleString() == (
+        "struct<event_id:bigint,ts:string,user_id:bigint,dt:string,event_type:string>"
+    )
+
+
 def test_unique_visits_stream_matches_batch(spark, events, staged):
     wm = jobs.watermarked_events(_stream(spark, staged), delay="1 minute")
     got = replay.run_to_table(stateful.unique_visits_stream(wm))
     want = state.unique_visits(events)
     cols = want.columns
     assert _sorted_rows(got, cols) == _sorted_rows(want, cols)
+
+
+def test_unique_visits_stream_drops_rows_behind_the_watermark(spark, tmp_path):
+    """`ts` reaches the operator as epoch micros (`ts_us`) carrying `ts`'s
+    watermark metadata, so EventTimeTimeout still finds its watermark and
+    still drops a row that arrives behind it (event 5)."""
+    import pandas as pd
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    files = [
+        [(1, "2024-01-02 00:00:00", 1)],
+        [(2, "2024-01-02 00:00:05", 2)],
+        [(3, "2024-01-03 00:00:00", 1)],
+        [(4, "2024-01-03 00:00:09", 4), (5, "2024-01-01 00:00:00", 5)],
+        [(6, "2024-01-04 00:00:00", 6)],
+    ]
+    src = tmp_path / "in"
+    src.mkdir()
+    for i, rows in enumerate(files):
+        pdf = pd.DataFrame(rows, columns=["event_id", "ts", "user_id"]).assign(event_type="page")
+        pdf["ts"] = pd.to_datetime(pdf["ts"]).astype("datetime64[us]")
+        path = src / f"f{i}.parquet"
+        pq.write_table(pa.Table.from_pandas(pdf, preserve_index=False), path)
+        os.utime(path, (1_000 + i, 1_000 + i))
+    stream = (
+        spark.readStream.schema("event_id bigint, ts timestamp, user_id bigint, event_type string")
+        .option("maxFilesPerTrigger", 1).parquet(str(src)).withWatermark("ts", "1 minute")
+    )
+    got = []
+    q = (
+        stateful.unique_visits_stream(stream).writeStream
+        .foreachBatch(lambda b, _: got.extend(map(tuple, b.collect())))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True).start()
+    )
+    assert q.awaitTermination(180)
+    assert sorted(got) == [
+        (1, "2024-01-02 00:00:00", 1, "2024-01-02", "page"),
+        (2, "2024-01-02 00:00:05", 2, "2024-01-02", "page"),
+        (3, "2024-01-03 00:00:00", 1, "2024-01-03", "page"),
+        (4, "2024-01-03 00:00:09", 4, "2024-01-03", "page"),
+        (6, "2024-01-04 00:00:00", 6, "2024-01-04", "page"),
+    ]
 
 
 def test_unique_visits_tws_construction(spark, events, staged):
@@ -1393,7 +1449,7 @@ def test_span_incremental_single_batch_matches_batch_operator(spark, sf_dir, tmp
     )
     assert q.awaitTermination(180)
 
-    got = {tuple(r) for r in sinks.read_spans(spark, spans).collect()}
+    got = {tuple(r) for r in sinks.read_batch_log(spark, spans).collect()}
     want = {tuple(r) for r in dedup_ops.duplicated_spans(docs).collect()}
     assert got == want
     # index holds one row per distinct (doc, gram hash)
@@ -1453,7 +1509,7 @@ def test_span_incremental_is_one_sided_across_batches(spark, tmp_path):
     )
     assert q.awaitTermination(180)
 
-    got = [tuple(r) for r in sinks.read_spans(spark, spans).collect()]
+    got = [tuple(r) for r in sinks.read_batch_log(spark, spans).collect()]
     # doc 3's block sits at token offset 3; w=8 windows fully inside a
     # 12-token block start at 3..7 -> span (start 3, len 12, 5 grams),
     # shared with exactly one other doc
@@ -1461,13 +1517,13 @@ def test_span_incremental_is_one_sided_across_batches(spark, tmp_path):
 
     # crash-replay idempotency (ADVICE r07): re-running the LAST batch
     # under its checkpointed batch_id appends byte-identical rows that
-    # read_spans collapses — the served annotations are unchanged
+    # read_batch_log collapses — the served annotations are unchanged
     writer = sinks.span_incremental_writer(index, spans)
     last_bid = (
         spark.read.parquet(spans).agg(F.max("batch_id")).first()[0]
     )
     writer(b1, int(last_bid))
-    replayed = [tuple(r) for r in sinks.read_spans(spark, spans).collect()]
+    replayed = [tuple(r) for r in sinks.read_batch_log(spark, spans).collect()]
     assert replayed == [(3, 3, 12, 5, 2)]
 
     # re-ingest hygiene: replaying batch 1's docs under a NEW batch id
@@ -1476,7 +1532,7 @@ def test_span_incremental_is_one_sided_across_batches(spark, tmp_path):
     n_idx = spark.read.parquet(index).count()
     writer(b1, 99)
     assert spark.read.parquet(index).count() == n_idx
-    again = [tuple(r) for r in sinks.read_spans(spark, spans).collect()]
+    again = [tuple(r) for r in sinks.read_batch_log(spark, spans).collect()]
     # doc 3 re-emits its span under batch 99 (its content still repeats
     # doc 1's block — the self-match guard only suppresses matching a
     # doc to ITSELF; a distinct batch_id is a real second ingest event)
@@ -2245,7 +2301,7 @@ def test_kmeans_assigning_writer_matches_batch_and_survives_replay(
     fn(chunks[1], 1)
     fn(chunks[2], 2)
 
-    got = sorted(map(tuple, sinks.read_assignments(spark, asg_path).collect()))
+    got = sorted(map(tuple, sinks.read_batch_log(spark, asg_path).collect()))
     stored = spark.read.parquet(cent_path)
     want = sorted(
         map(tuple, similarity.kmeans_assign(emb, centroids=stored).collect())

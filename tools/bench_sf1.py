@@ -39,7 +39,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -348,9 +349,9 @@ def main() -> None:
     if "--full" in sys.argv:
         print("full query surface:", flush=True)
         lines += run_full_surface(spark, qs, sf1_dir)
-    with open("/root/repo/BENCH_SF1.md", "w") as f:
+    with open(os.path.join(ROOT, "BENCH_SF1.md"), "w") as f:
         f.write("\n".join(lines))
-    print("wrote /root/repo/BENCH_SF1.md", flush=True)
+    print(f"wrote {ROOT}/BENCH_SF1.md", flush=True)
 
 
 if __name__ == "__main__":

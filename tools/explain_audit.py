@@ -5,15 +5,17 @@ pushdown, codegen) plus full plans for representative queries.
 The properties this surfaces are pinned as regression tests in
 tests/test_explain.py; PLANS.md is the human-readable artifact.
 
-Usage: python tools/explain_audit.py [sf_dir]  (writes /root/repo/PLANS.md)
+Usage: python tools/explain_audit.py [sf_dir]  (writes PLANS.md at the repository root)
 """
 
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from flinkproject_spark.session import get_spark  # noqa: E402
@@ -62,7 +64,7 @@ def main() -> None:
         if name in FULL_PLANS:
             fulls[name] = plan
 
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write(
             "# PLANS — physical-plan audit of every driver query\n\n"
             f"Generated by `python tools/explain_audit.py {SF_DIR}`; plan shapes are\n"

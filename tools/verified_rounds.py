@@ -18,9 +18,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
-
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, HERE)
 
 
 def main() -> None:
