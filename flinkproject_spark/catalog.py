@@ -6,19 +6,29 @@ engine's equivalent "storage layer" for batch parity testing is the parquet
 star schema at /root/testdata/sf*/ (TESTDATA.md). Streaming variants replay
 the same tables through Structured Streaming (flinkproject_spark.streaming).
 
-Scale note: loading is a plain `spark.read.parquet` so Catalyst keeps
-predicate pushdown / column pruning / partition pruning available — on a
-real deployment these paths would be s3://.../table/ partitioned
-directories and nothing here would change.
+Loading: each table is a local parquet file, or a Spark-written directory
+of part files. :func:`load_table` reads the schema from the parquet footer
+with pyarrow (for a directory, the footer of its first data file) and hands
+it to ``spark.read``, so Spark runs no schema-inference job, and Catalyst
+still sees a plain parquet scan with predicate pushdown and column pruning.
+The built DataFrame is kept per SparkSession, keyed on the resolved path,
+and reused while every data file keeps its ``(st_ino, st_mtime_ns,
+st_size)``. A path with a non-local scheme (``s3://``, ``hdfs://``) or a
+partitioned directory is refused with ``ValueError``: the footer and the
+file stamps are read from the local filesystem.
 """
 
 from __future__ import annotations
 
 import os
+from urllib.parse import unquote, urlparse
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_type
 
 TABLES = (
     "region",
@@ -36,17 +46,33 @@ TABLES = (
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
+def local_path(uri: str) -> str:
+    """Filesystem path of a local path or ``file:`` URI. Spark reports
+    percent-encoded URIs (`file:///a%20b/part-0.parquet`), so the path is
+    parsed and unquoted, never sliced; a non-local scheme raises."""
+    u = urlparse(uri)
+    if u.scheme not in ("", "file"):
+        raise ValueError(f"not a local file: {uri}")
+    return unquote(u.path)
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one testdata table, normalizing physical quirks.
+
+    Starts no Spark job. The first call for a path in a session builds the
+    DataFrame from the footer schema; later calls return that same
+    DataFrame while the data files are unchanged, and build a new one once
+    any of them is rewritten, added or removed.
 
     Timestamp physicals vary across driver testdata generations and both
     arrive here normalized to a session-tz (UTC) TIMESTAMP:
 
     - parquet TIMESTAMP(NANOS): with ``spark.sql.legacy.parquet.nanosAsLong``
-      the column arrives as a long of nanoseconds and is converted with
-      integer division (``div`` — no double round-trip, which would lose
-      precision above 2^53). DuckDB truncates ns->us the same way.
-    - parquet TIMESTAMP(MICROS, isAdjustedToUTC=false): Spark 4 infers
+      the column arrives as a long of nanoseconds and, for ``events.ts``, is
+      converted with integer division (``div`` — no double round-trip,
+      which would lose precision above 2^53). DuckDB truncates ns->us the
+      same way.
+    - parquet TIMESTAMP(MICROS, isAdjustedToUTC=false): Spark 4 reads it as
       TIMESTAMP_NTZ (``spark.sql.parquet.inferTimestampNTZ.enabled``
       defaults true); cast to TIMESTAMP under the pinned UTC session zone —
       a pure type-tag change, zero arithmetic — so every downstream
@@ -54,17 +80,81 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
       DuckDB reads the same bytes as naive timestamps, so both engines see
       identical wall-clock values.
     """
+    path = os.path.realpath(local_path(f"{sf_dir}/{name}.parquet"))
+    files = _data_files(path)
+    stamp = [(f, st.st_ino, st.st_mtime_ns, st.st_size) for f in files for st in [os.stat(f)]]
+    # kept on the session object itself: a WeakKeyDictionary keyed on the
+    # session would never drop an entry, since each DataFrame refers back to
+    # its session
+    memo = spark.__dict__.setdefault("_catalog_tables", {})
+    hit = memo.get(path)
+    if hit is not None and hit[0] == stamp:
+        return hit[1]
     try:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     except Exception:
         pass
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events" and isinstance(df.schema["ts"].dataType, T.LongType):
-        df = df.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
-    for f in df.schema.fields:
-        if isinstance(f.dataType, T.TimestampNTZType):
-            df = df.withColumn(f.name, F.col(f.name).cast("timestamp"))
+    schema = _footer_schema(files[0])
+    df = spark.read.schema(schema).parquet(path)
+    cols, normalized = [], False
+    for f in schema.fields:
+        c = F.col(f"`{f.name.replace('`', '``')}`")
+        if name == "events" and f.name == "ts" and isinstance(f.dataType, T.LongType):
+            c, normalized = F.expr("timestamp_micros(ts div 1000)").alias("ts"), True
+        elif isinstance(f.dataType, T.TimestampNTZType):
+            c, normalized = c.cast("timestamp").alias(f.name), True
+        cols.append(c)
+    if normalized:
+        df = df.select(*cols)
+    memo[path] = (stamp, df)
     return df
+
+
+def _data_files(path: str) -> list[str]:
+    """The parquet file itself, or a Spark-written directory's data files
+    (names starting with ``.`` or ``_`` are checksums and markers)."""
+    if not os.path.isdir(path):
+        return [path]  # a missing one fails its stat with FileNotFoundError
+    files = []
+    for e in sorted(os.scandir(path), key=lambda e: e.name):
+        if e.name.startswith((".", "_")):
+            continue
+        if e.is_dir():
+            raise ValueError(f"partitioned parquet directory is not supported: {path}")
+        files.append(e.path)
+    if not files:
+        raise ValueError(f"no parquet data files in {path}")
+    return files
+
+
+def _footer_schema(file: str) -> T.StructType:
+    """The Spark schema that parquet inference gives for ``file``, with
+    ``nanosAsLong`` on: TIMESTAMP(NANOS) is a long, INT96 a TIMESTAMP, and
+    a timestamp not adjusted to UTC a TIMESTAMP_NTZ. Every field is
+    nullable, as Spark makes file-source schemas."""
+    meta = pq.read_metadata(file)
+    leaves = [meta.schema.column(i) for i in range(len(meta.schema))]
+    int96 = {c.path for c in leaves if c.physical_type == "INT96"}
+    fields = []
+    for f in meta.schema.to_arrow_schema():
+        t = f.type
+        if pa.types.is_timestamp(t):
+            if f.name in int96:
+                st = T.TimestampType()
+            elif t.unit == "ns":
+                st = T.LongType()
+            else:
+                st = T.TimestampType() if t.tz else T.TimestampNTZType()
+        elif _has_timestamp(t):
+            raise ValueError(f"nested timestamp column {f.name!r} in {file} is not supported")
+        else:
+            st = from_arrow_type(t)
+        fields.append(T.StructField(f.name, st, True))
+    return T.StructType(fields)
+
+
+def _has_timestamp(t: pa.DataType) -> bool:
+    return pa.types.is_timestamp(t) or any(_has_timestamp(t.field(i).type) for i in range(t.num_fields))
 
 
 def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLES) -> dict[str, DataFrame]:

@@ -21,10 +21,11 @@ from __future__ import annotations
 
 import logging
 import os
-from urllib.parse import unquote, urlparse
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from flinkproject_spark.catalog import local_path
 
 
 def _dot(a: str | Column, b: str | Column) -> Column:
@@ -791,16 +792,6 @@ def kmeans_auto_k(
 KM_TASK_TARGET_BYTES = 4 << 20
 
 
-def _local_path(uri: str) -> str:
-    """Filesystem path of a local `inputFiles()` entry. Spark reports
-    percent-encoded URIs (`file:///a%20b/part-0.parquet`), so the path is
-    parsed and unquoted, never sliced; a non-local scheme raises."""
-    u = urlparse(uri)
-    if u.scheme not in ("", "file"):
-        raise ValueError(f"not a local file: {uri}")
-    return unquote(u.path)
-
-
 def _km_parallelize(q: DataFrame) -> DataFrame:
     """Minimum-parallelism guard for the assignment passes: a small
     parquet collection can arrive as ONE input split (the sf10 screen
@@ -822,7 +813,7 @@ def _km_parallelize(q: DataFrame) -> DataFrame:
         return q
     files = q.inputFiles()
     try:
-        nbytes = sum(os.path.getsize(_local_path(p)) for p in files)
+        nbytes = sum(os.path.getsize(local_path(p)) for p in files)
         reason = f"{len(files)} input file(s), {nbytes} bytes"
     except (OSError, ValueError) as ex:  # non-local / unsizable source
         nbytes, reason = 0, ex
@@ -1452,7 +1443,12 @@ def ivf_pq_topk(
         cent_rows if cent_rows is not None else cent.collect(),
         m,
         bits,
-    ).localCheckpoint(eager=False)  # codebook + queries + candidates read it
+    ).persist()
+    # codebook + queries + candidates read it. persist(), not a lazy
+    # localCheckpoint: the checkpoint's tasks ran in the consumer's job and
+    # reported to the SQL-metric accumulators of a plan the driver had
+    # already dropped ("attempted to access non-existent accumulator"),
+    # as in dedup's shingle reuse
     asg = fused.filter(F.col("block") == 0).select("vec_id", "cid")
     cand_pairs = (
         asg.join(F.broadcast(probes), "cid")

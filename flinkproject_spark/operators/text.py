@@ -921,11 +921,13 @@ def nb_quality_fit(
     Misuse guard: a single-class corpus (every doc passes or every doc
     fails the gate) cannot train a discriminator — ln(n_pos/n_neg)
     degenerates — so it raises loudly instead of emitting a model of
-    NULLs (the whiten_embeddings discipline). The guard is IN-PLAN
-    (raise_error riding the prior row, r12): it fires when the model
-    executes, before any row is emitted — the r11 form paid an eager
-    .first() job at plan-construction time for the same check, which
-    put a full corpus gate pass in front of every consumer's real work.
+    NULLs (the whiten_embeddings discipline). The guard is IN-PLAN:
+    raise_error rides every column of the prior row and of every vocab
+    row, so neither column pruning nor a filter that drops the prior row
+    removes it. It fires when the model executes, before any row is
+    emitted — the r11 form paid an eager .first() job at
+    plan-construction time for the same check, which put a full corpus
+    gate pass in front of every consumer's real work.
 
     Plan shape: one explode -> (token, label) groupBy (the only
     corpus-scale shuffle, map-side combined), totals read the
@@ -970,7 +972,7 @@ def nb_quality_fit(
     )
 
     def _guard(col):
-        # rides EVERY prior column so column pruning can't drop the check
+        # rides EVERY model column so column pruning can't drop the check
         return F.when(bad, err).otherwise(col)
 
     tok = (
@@ -993,8 +995,18 @@ def nb_quality_fit(
         - F.log((F.col("ct_neg") + 1) / (F.col("tn") + F.col("v"))),
         6,
     ).cast("decimal(18,6)")
-    model = vocab.crossJoin(F.broadcast(totals)).select(
-        F.col("t").alias("token"), "ct_pos", "ct_neg", lr.alias("lr")
+    # the guard rides the vocab rows too (the one-row prior aggregate is
+    # broadcast to them): a consumer that filters token != NB_PRIOR_TOKEN
+    # lets PruneFilters drop the prior branch of the union below
+    model = (
+        vocab.crossJoin(F.broadcast(totals))
+        .crossJoin(F.broadcast(pri))
+        .select(
+            _guard(F.col("t")).alias("token"),
+            _guard(F.col("ct_pos")).alias("ct_pos"),
+            _guard(F.col("ct_neg")).alias("ct_neg"),
+            _guard(lr).alias("lr"),
+        )
     )
     prior = pri.select(
         F.lit(NB_PRIOR_TOKEN).alias("token"),
@@ -1017,6 +1029,10 @@ def nb_model_score(
     score_against_vocab argument), so the model applies soundly to text
     it never saw — new batches, or the SCRUBBED text of a cleaning
     pipeline. Returns (doc_id, nb_score_ppm).
+
+    Duplicate doc_ids are not kept apart: the per-doc aggregate groups by
+    doc_id, so rows sharing one doc_id come back as ONE row whose score
+    sums all their tokens' lr_ppm plus a single prior.
 
     BROADCAST CONTRACT (ADVICE r11): `model` is unconditionally
     F.broadcast()-hinted — it must be a VOCABULARY-sized table

@@ -87,6 +87,23 @@ def test_tools_use_only_existing_engine_names():
     assert not missing, missing
 
 
+def test_verified_rounds_help_leaves_the_ledger_alone():
+    """`--help` exits before VERIFIED.md is regenerated."""
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    ledger = os.path.join(root, "VERIFIED.md")
+    with open(ledger, "rb") as fh:
+        before = fh.read()
+    out = subprocess.run([sys.executable, os.path.join(root, "tools", "verified_rounds.py"), "--help"],
+                         capture_output=True, text=True, timeout=120)
+    assert out.returncode == 0 and "usage:" in out.stdout
+    with open(ledger, "rb") as fh:
+        assert fh.read() == before
+
+
 def test_entry_smoke(spark):
     df = entrymod.entry(spark)
     rows = df.collect()

@@ -2713,6 +2713,26 @@ def test_nb_quality_fit_single_class_raises(spark):
             model.select(col).collect()
 
 
+def test_nb_quality_fit_single_class_guard_survives_a_vocab_filter(spark):
+    """A consumer that keeps only the vocab rows (token != NB_PRIOR_TOKEN)
+    lets Catalyst prune the prior branch of the model's union, so a guard
+    on the prior row alone would let a single-class corpus through as a
+    silent degenerate vocab model. The guard rides the vocab rows too."""
+    docs = spark.createDataFrame(
+        [(i, "en", "s", "alpha beta gamma delta", 22) for i in range(4)],
+        "doc_id bigint, lang string, source string, text string, n_chars int",
+    )
+    labels = spark.createDataFrame([(i, True) for i in range(4)], "doc_id bigint, keep boolean")
+    model = text.nb_quality_fit(docs, labels)
+    with pytest.raises(Exception, match="single-class"):
+        model.collect()
+    vocab = model.filter(F.col("token") != text.NB_PRIOR_TOKEN)
+    with pytest.raises(Exception, match="single-class"):
+        vocab.collect()
+    with pytest.raises(Exception, match="single-class"):
+        vocab.select("token").collect()
+
+
 def test_nb_model_score_oov_is_prior_and_serve_matches_inline(tables):
     """OOV soundness: a doc made ONLY of unseen tokens scores exactly the
     prior (every token contributes 0). And the persisted-model path is

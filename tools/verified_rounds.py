@@ -12,6 +12,7 @@ rotation or round archive:
 
 from __future__ import annotations
 
+import argparse
 import glob
 import json
 import os
@@ -23,6 +24,7 @@ sys.path.insert(0, HERE)
 
 
 def main() -> None:
+    argparse.ArgumentParser(description=__doc__.split("\n")[0]).parse_args()
     import __spark_entry__ as entrymod
 
     names = list(entrymod.queries())
