@@ -8,7 +8,9 @@ twin. Cross-engine conventions (see flinkproject_spark.functions):
 - money sums: CAST to DECIMAL(18,2) *before* SUM (exact, order-insensitive),
   surfaced as DOUBLE — bit-identical across engines;
 - event timestamps are formatted to 'yyyy-MM-dd HH:mm:ss' strings in outputs
-  (events.parquet is TIMESTAMP(NANOS); formatting removes precision skew);
+  (events.parquet stores TIMESTAMP(MICROS); the nanos -> micros branch in
+  catalog.load_table serves older testdata only; formatting removes
+  precision skew);
 - deterministic 64-bit hashing via md5 prefix (same expression both engines);
 - every float ratio is an explicit double division of identically-derived
   operands; cosines/jaccards rounded to 6 decimals;
@@ -441,11 +443,8 @@ def q_ann_recall_report(spark, sf):
     # ONE normalized intermediate feeds the approximate arm's query and
     # candidate subtrees (r12, VERDICT r11 task 3: shared scan)
     e = similarity.with_norm(emb).localCheckpoint(eager=False)
-    # exact arm: the VECTORIZED exact kernel (guide §4.2) — same output
-    # contract and the SAME oracle SQL as the brute-force twin (both are
-    # driver-green against _topk_sql(cell_pruned=False)), so the report
-    # is unchanged; the interpreted zip_with fold stays declared as the
-    # standalone sim_topk_bruteforce twin (r12)
+    # exact arm: the vectorized exact kernel — sim_topk_vectorized, whose
+    # oracle is the exact CTE below (_topk_sql(cell_pruned=False))
     exact = similarity.cosine_topk_vectorized(emb, QUERY_IDS)
     approx = similarity.cosine_topk_ivf_nprobe(emb, QUERY_IDS, normed=e)
     out = similarity.recall_at_k(approx, exact, k=10)
@@ -474,8 +473,7 @@ def q_pq_recall_report(spark, sf):
     shortlist) knobs, oracle-checked because both pipelines are
     DuckDB-reproducible."""
     emb = _t(spark, sf, "embeddings")
-    # exact arm: vectorized exact kernel — same output and the same
-    # oracle SQL as the brute-force twin (see q_ann_recall_report, r12)
+    # exact arm: the vectorized exact kernel (see q_ann_recall_report)
     exact = similarity.cosine_topk_vectorized(emb, QUERY_IDS)
     # the rerank stage reads with_norm(emb) for its query AND candidate
     # subtrees — one checkpointed computation instead of two (r12)
@@ -483,11 +481,6 @@ def q_pq_recall_report(spark, sf):
     approx = similarity.pq_adc_topk(emb, QUERY_IDS, rerank="auto", normed=e)
     out = similarity.recall_at_k(approx, exact, k=10)
     return out.select("query_id", F.round("recall", 6).alias("recall"))
-
-
-def q_sim_topk_bruteforce(spark, sf):
-    out = similarity.cosine_topk_bruteforce(_t(spark, sf, "embeddings"), QUERY_IDS)
-    return out.withColumn("rank", F.col("rank").cast("bigint"))
 
 
 def q_sim_topk_vectorized(spark, sf):
@@ -870,37 +863,12 @@ def q_corpus_pipeline_v3(spark, sf):
     return corpus.build_training_corpus_v3(_t(spark, sf, "documents"))
 
 
-def q_corpus_pipeline(spark, sf):
-    """The end-to-end training-corpus build (plans/corpus.py): exact-dedup
-    winners -> quality gate -> deterministic stratified sample -> token-
-    budget packing, one Catalyst plan."""
-    from flinkproject_spark.plans import corpus
-
-    return corpus.build_training_corpus(
-        _t(spark, sf, "documents"),
-        min_quality=0.5,
-        rates=SAMPLE_RATES,
-        default_rate=0.5,
-        budget_tokens=10_000,
-    )
-
-
-def q_corpus_pipeline_v4(spark, sf):
-    """The sub-document-clean corpus build (plans/corpus.py v4): repeated-
-    span scrub -> doc dedup on the SCRUBBED text -> quality gate ->
-    token-budget pack, one Catalyst plan composing the round-7 surface."""
-    from flinkproject_spark.plans import corpus
-
-    return corpus.build_training_corpus_v4(_t(spark, sf, "documents"))
-
-
 def q_corpus_pipeline_v5(spark, sf):
     """The TRAINED-classifier corpus build (plans/corpus.py v5): span
     scrub -> dedup -> Naive Bayes quality gate under the PERSISTED
     `_nb_model` table (fit once on the raw corpus, applied to the
     scrubbed text — OOV-sound) -> budget pack ranked by the exact-int64
-    classifier margin. v4's hand-weighted composite replaced by the
-    trained signal end to end."""
+    classifier margin."""
     from flinkproject_spark.plans import corpus
 
     docs, model = _nb_model(spark, sf)
@@ -1538,8 +1506,7 @@ def q_ivf_pq_recall_report(spark, sf):
     # shared normalized intermediate for the IVFxPQ rerank stage's query
     # and candidate subtrees (r12, VERDICT r11 task 3)
     e = similarity.with_norm(emb).localCheckpoint(eager=False)
-    # Exact arm: the vectorized exact kernel — same output and the same
-    # oracle SQL as the brute-force twin (see q_ann_recall_report, r12).
+    # Exact arm: the vectorized exact kernel (see q_ann_recall_report).
     # Overlap the independent arms (guide §2.6): the exact ground truth
     # does not depend on the fit, but ivf_pq_topk's inline fit blocks the
     # driver for its aggregate + seed + n_iter Lloyd collects — so the
@@ -1577,131 +1544,88 @@ def q_ivf_pq_recall_report(spark, sf):
 # Round-12 correctness window (the rotation rule documented in VERIFIED.md:
 # queries whose implementation or oracle text changed this round rotate IN,
 # then the oldest-evidence cohort). First: the new Arrow CJK twin and the 24
-# queries the r12 optimization touched (k-means fit core, recall-report
-# arms, NB fit/score, fused IVFxPQ quantization, HLL null filter, minhash
-# report join, CC/pagerank checkpointing). Then: rotated-out consumers of
-# operators the r11 round changed (spans family, CMS/tf-idf/blocked-ngram/
-# copurchase), then the oldest-evidence cohort from the r11 rotation's
-# out-list. Everything else holds the tail in its r11 order.
-_R12_WINDOW = [
-    "a19_cjk_dictionary_arrow",
-    "sim_topk_ivf_pq",
-    "ivf_pq_recall_report",
-    "a19_cjk_dictionary",
-    "quality_nb_fit",
-    "quality_nb_scores",
-    "corpus_pipeline_v5",
-    "cluster_kmeans",
-    "cluster_kmeans_assign",
-    "cluster_kmeans_sampled",
-    "cluster_kmeans_serve",
-    "dedup_embedding_trained",
-    "dedup_embedding_served",
-    "dedup_semantic_trained",
-    "sim_topk_ivf_trained",
-    "cluster_topics",
-    "ann_recall_report",
-    "pq_recall_report",
-    "sim_topk_pq",
-    "minhash_pr_report",
-    "events_distinct_hll",
-    "dedup_clusters",
-    "dedup_clusters_star",
-    "pagerank",
-    "value_quantiles_hist",
-    "dedup_spans",
-    "dedup_spans_apply",
-    "dedup_spans_intradoc",
-    "event_freq_cms",
-    "text_tfidf",
-    "corpus_pipeline_v4",
-    "dedup_minhash_precision",
-    "dedup_ngram_blocked",
-    "copurchase",
-    "text_logprob",
-    "text_bigram_logprob",
-    "text_dsir",
-    "dedup_srp",
-    "dedup_srp_scaled",
-    "dedup_chunks",
-    "dedup_chunks_apply",
-    "dedup_containment",
-    "dedup_embedding",
-    "dedup_semantic",
-    "ngram_novelty",
-    "quality_deciles",
-    "text_fingerprint",
-    "text_bpe_tokens",
-    "mm_frame_sample",
-    "mm_resize",
-]
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Dict ORDER is load-bearing: the round driver verifies the first 50
-    # entries against the DuckDB oracles — _R12_WINDOW above is this
-    # round's first-50; the base dict below keeps the r11 ordering (and
-    # its rotation rationale) for the tail. Per-query recency is
-    # auto-audited in VERIFIED.md (tools/verified_rounds.py).
-    qmap = {
-        # -- NEW this round (r11): the composed IVFxPQ serving tier +
-        #    recall row, the real-CJK dictionary-BMM query, the trained
-        #    NB quality classifier (fit + serve + pipeline v5), and the
-        #    transition-matrix recommendation consumer
+    # Dict ORDER is load-bearing: the driver verifies the first 50 entries
+    # against the DuckDB oracles. A query whose engine code changes moves
+    # to the front (VERIFIED.md, tools/verified_rounds.py).
+    return {
+        "corpus_pipeline_v2": q_corpus_pipeline_v2,
+        "corpus_pipeline_v3": q_corpus_pipeline_v3,
+        "corpus_pipeline_v5": q_corpus_pipeline_v5,
+        "token_budget_pack": q_token_budget_pack,
+        "text_quality": q_text_quality,
+        "quality_deciles": q_quality_deciles,
+        "corpus_profile": q_corpus_profile,
+        "corpus_by_cluster": q_corpus_by_cluster,
+        "corpus_weighted_sample": q_corpus_weighted_sample,
+        "corpus_pack": q_corpus_pack,
+        "corpus_curriculum": q_corpus_curriculum,
+        "dedup_incremental": q_dedup_incremental,
+        "corpus_mix": q_corpus_mix,
+        "text_bpe_tokens": q_text_bpe_tokens,
+        "hybrid_search": q_hybrid_search,
+        "a19_cjk_dictionary_arrow": q_a19_cjk_dictionary_arrow,
         "sim_topk_ivf_pq": q_sim_topk_ivf_pq,
         "ivf_pq_recall_report": q_ivf_pq_recall_report,
         "a19_cjk_dictionary": q_a19_cjk_dictionary,
-        "a19_cjk_dictionary_arrow": q_a19_cjk_dictionary_arrow,
         "quality_nb_fit": q_quality_nb_fit,
         "quality_nb_scores": q_quality_nb_scores,
-        "corpus_pipeline_v5": q_corpus_pipeline_v5,
-        "event_next_topk": q_event_next_topk,
-        # -- code CHANGED this round (rotation rule): histq null/NaN
-        #    filter order; kmeans_fit_sampled guard branch + model-cache
-        #    fingerprint (serve/sampled/served consumers); the pq_adc_topk
-        #    ADC-helper refactor (sim_topk_pq, pq_recall_report); the
-        #    extract_features extractor tier (mm_features)
-        "value_quantiles_hist": q_value_quantiles_hist,
-        "cluster_kmeans_sampled": q_cluster_kmeans_sampled,
-        "cluster_kmeans_serve": q_cluster_kmeans_serve,
-        "dedup_embedding_served": q_dedup_embedding_served,
-        "sim_topk_pq": q_sim_topk_pq,
-        "pq_recall_report": q_pq_recall_report,
-        "mm_features": q_mm_features,
-        #    second-pass rotation: the Gopher-gate SQL consolidation
-        #    rewrote these four oracles' text (values identical), so
-        #    they re-enter the window; the r08 cohort's tail four defer
-        #    one round to make room
-        "text_gopher": q_text_gopher,
-        "corpus_pipeline_v2": q_corpus_pipeline_v2,
-        "corpus_profile": q_corpus_profile,
-        "corpus_pipeline_v3": q_corpus_pipeline_v3,
-        # -- oldest-evidence cohort: the r08-verified block, rotated in
-        #    so no query's evidence ages past two rounds (text_fingerprint
-        #    and the displaced tail four are the r08 rows the window
-        #    cannot fit — they front the r12 rotation)
-        "contamination_bloom": q_contamination_bloom,
-        "hybrid_search": q_hybrid_search,
-        "dedup_semantic_trained": q_dedup_semantic_trained,
-        "sim_topk_ivf_trained": q_sim_topk_ivf_trained,
-        "urgent_revenue": q_urgent_revenue,
-        "events_zorder": q_events_zorder,
         "cluster_kmeans": q_cluster_kmeans,
         "cluster_kmeans_assign": q_cluster_kmeans_assign,
+        "cluster_kmeans_sampled": q_cluster_kmeans_sampled,
+        "cluster_kmeans_serve": q_cluster_kmeans_serve,
         "dedup_embedding_trained": q_dedup_embedding_trained,
+        "dedup_embedding_served": q_dedup_embedding_served,
+        "dedup_semantic_trained": q_dedup_semantic_trained,
+        "sim_topk_ivf_trained": q_sim_topk_ivf_trained,
+        "cluster_topics": q_cluster_topics,
+        "ann_recall_report": q_ann_recall_report,
+        "pq_recall_report": q_pq_recall_report,
+        "sim_topk_pq": q_sim_topk_pq,
+        "minhash_pr_report": q_minhash_pr_report,
+        "events_distinct_hll": q_events_distinct_hll,
+        "dedup_clusters": q_dedup_clusters,
+        "dedup_clusters_star": q_dedup_clusters_star,
+        "pagerank": q_pagerank,
+        "value_quantiles_hist": q_value_quantiles_hist,
+        "dedup_spans": q_dedup_spans,
+        "dedup_spans_apply": q_dedup_spans_apply,
+        "dedup_spans_intradoc": q_dedup_spans_intradoc,
+        "event_freq_cms": q_event_freq_cms,
+        "text_tfidf": q_text_tfidf,
+        "dedup_minhash_precision": q_dedup_minhash_precision,
+        "dedup_ngram_blocked": q_dedup_ngram_blocked,
+        "copurchase": q_copurchase,
+        "text_logprob": q_text_logprob,
+        "text_bigram_logprob": q_text_bigram_logprob,
+        "text_dsir": q_text_dsir,
+        "dedup_srp": q_dedup_srp,
+        "dedup_srp_scaled": q_dedup_srp_scaled,
+        "dedup_chunks": q_dedup_chunks,
+        "dedup_chunks_apply": q_dedup_chunks_apply,
+        "dedup_containment": q_dedup_containment,
+        "dedup_embedding": q_dedup_embedding,
+        "dedup_semantic": q_dedup_semantic,
+        "ngram_novelty": q_ngram_novelty,
+        "text_fingerprint": q_text_fingerprint,
+        "mm_frame_sample": q_mm_frame_sample,
+        "mm_resize": q_mm_resize,
+        "event_next_topk": q_event_next_topk,
+        "mm_features": q_mm_features,
+        "text_gopher": q_text_gopher,
+        "contamination_bloom": q_contamination_bloom,
+        "urgent_revenue": q_urgent_revenue,
+        "events_zorder": q_events_zorder,
         "product_stats_approx": q_product_stats_approx,
         "dedup_minhash_xx": q_dedup_minhash_xx,
         "product_stats": q_product_stats,
         "dedup_exact": q_dedup_exact,
-        "sim_topk_bruteforce": q_sim_topk_bruteforce,
         "sim_topk_vectorized": q_sim_topk_vectorized,
         "sim_topk_ivf": q_sim_topk_ivf,
         "dedup_minhash_lsh": q_dedup_minhash_lsh,
-        "dedup_clusters": q_dedup_clusters,
         "dedup_simhash": q_dedup_simhash,
         "text_token_stats": q_text_token_stats,
         "text_corpus_summary": q_text_corpus_summary,
-        "text_quality": q_text_quality,
         "text_langid": q_text_langid,
         "session_stats": q_session_stats,
         "mm_decode": q_mm_decode,
@@ -1711,17 +1635,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "daily_anomalies": q_daily_anomalies,
         "daily_anomalies_dense": q_daily_anomalies_dense,
         "order_value_percentiles_approx": q_order_value_percentiles_approx,
-        "ann_recall_report": q_ann_recall_report,
-        # ---- end of the 50-query verified window ----
-        # -- r10/r09-verified (and the leftover r08 text_fingerprint),
-        #    untouched this round
         "skew_hot_join": q_skew_hot_join,
-        # displaced window tail (r08 evidence, defers to r12 with
-        # text_fingerprint)
-        "minhash_pr_report": q_minhash_pr_report,
-        "mm_frame_sample": q_mm_frame_sample,
-        "mm_resize": q_mm_resize,
-        "text_bpe_tokens": q_text_bpe_tokens,
         "event_transitions": q_event_transitions,
         "a10_unique_visits": q_a10_unique_visits,
         "a11_is_new_flag": q_a11_is_new_flag,
@@ -1738,35 +1652,12 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "a20_sql_province_stats": q_a20_sql_province_stats,
         "b4_cdc_roundtrip": q_b4_cdc_roundtrip,
         "province_stats": q_province_stats,
-        "dedup_ngram_blocked": q_dedup_ngram_blocked,
         "contamination": q_contamination,
         "corpus_shuffle": q_corpus_shuffle,
-        "corpus_mix": q_corpus_mix,
-        "text_logprob": q_text_logprob,
-        "dedup_chunks": q_dedup_chunks,
-        "dedup_chunks_apply": q_dedup_chunks_apply,
-        "corpus_weighted_sample": q_corpus_weighted_sample,
-        "text_bigram_logprob": q_text_bigram_logprob,
         "cep_followedby": q_cep_followedby,
-        "corpus_curriculum": q_corpus_curriculum,
-        "text_dsir": q_text_dsir,
         "corpus_zipf": q_corpus_zipf,
         "split_leakage": q_split_leakage,
-        "dedup_minhash_precision": q_dedup_minhash_precision,
-        "ngram_novelty": q_ngram_novelty,
-        "dedup_containment": q_dedup_containment,
-        "quality_deciles": q_quality_deciles,
-        "dedup_embedding": q_dedup_embedding,
-        "dedup_semantic": q_dedup_semantic,
-        "dedup_srp": q_dedup_srp,
-        "dedup_srp_scaled": q_dedup_srp_scaled,
-        "dedup_spans": q_dedup_spans,
-        "dedup_spans_apply": q_dedup_spans_apply,
-        "dedup_spans_intradoc": q_dedup_spans_intradoc,
-        "text_fingerprint": q_text_fingerprint,
         "embedding_covariance": q_embedding_covariance,
-        "events_distinct_hll": q_events_distinct_hll,
-        "pagerank": q_pagerank,
         "a1_project_orders": q_a1_project_orders,
         "a2_filter_events": q_a2_filter_events,
         "a3_explode_words": q_a3_explode_words,
@@ -1784,18 +1675,13 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "order_prorate": q_order_prorate,
         "text_chunks": q_text_chunks,
         "corpus_split": q_corpus_split,
-        "corpus_pack": q_corpus_pack,
         "corpus_sample": q_corpus_sample,
-        "token_budget_pack": q_token_budget_pack,
         "text_repetition": q_text_repetition,
         "text_entropy": q_text_entropy,
         "cluster_assign": q_cluster_assign,
-        "dedup_incremental": q_dedup_incremental,
         "dedup_normalized": q_dedup_normalized,
         "sim_quantize": q_sim_quantize,
         "corpus_cube": q_corpus_cube,
-        "corpus_by_cluster": q_corpus_by_cluster,
-        "corpus_pipeline": q_corpus_pipeline,
         "event_type_pivot": q_event_type_pivot,
         "dedup_survivors": q_dedup_survivors,
         "running_spend": q_running_spend,
@@ -1805,16 +1691,8 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "scd2_order_state": q_scd2_order_state,
         "a8_interval_join_outer": q_a8_interval_join_outer,
         "sim_topk_ivf_nprobe": q_sim_topk_ivf_nprobe,
-        "event_freq_cms": q_event_freq_cms,
-        "corpus_pipeline_v4": q_corpus_pipeline_v4,
-        "dedup_clusters_star": q_dedup_clusters_star,
         "text_redact_pii": q_text_redact_pii,
-        "text_tfidf": q_text_tfidf,
-        "copurchase": q_copurchase,
-        "cluster_topics": q_cluster_topics,
     }
-    # r12 rotation: window first, tail keeps its r11 relative order
-    return {**{k: qmap[k] for k in _R12_WINDOW}, **qmap}
 
 
 # ---------------------------------------------------------------------------
@@ -2676,7 +2554,7 @@ QUALIFY rank <= {k}
 
 def _ann_recall_sql() -> str:
     """Oracle twin of q_ann_recall_report: both top-k pipelines as CTEs
-    (the same SQL the sim_topk_bruteforce / sim_topk_ivf_nprobe oracles
+    (the same SQL the sim_topk_vectorized / sim_topk_ivf_nprobe oracles
     run, whose k=10 is baked into their QUALIFY — no k parameter here, so
     the label can never drift from what the CTEs actually emit), then
     per-query |exact ∩ approx| / |exact|."""
@@ -3069,7 +2947,7 @@ _TRANSITIONS_SQL = """
 
 
 def _pipeline_v5_sql(budget_tokens: int = 10_000) -> str:
-    """q_corpus_pipeline_v5 twin: v4's scrub + keeper-dedup CTEs, the
+    """q_corpus_pipeline_v5 twin: the span-scrub + keeper-dedup CTEs, the
     full NB fit replay (_nb_ctes — the persisted model is a cache of
     that pure function), then scoring of the SCRUBBED text and the
     margin-ranked budget pack."""
@@ -3835,26 +3713,6 @@ def oracle_sql() -> dict[str, str]:
         "dedup_spans": _spans_sql(),
         "dedup_spans_intradoc": _spans_sql(intra_doc=True),
         "dedup_spans_apply": _SPANS_APPLY_SQL,
-        "corpus_pipeline_v4": f"""
-            WITH scrub AS ({_SPANS_APPLY_SQL.strip()}),
-            keepers AS (
-              SELECT MIN(doc_id) AS doc_id FROM scrub GROUP BY md5(clean_text)),
-            scored AS (
-              SELECT s.doc_id,
-                     len(string_split_regex(clean_text, '\\s+'))::BIGINT AS n_tokens,
-                     s.n_tokens_dropped,
-                     least(len(string_split_regex(clean_text, '\\s+'))::DOUBLE / 100.0, 1.0) * 0.5
-                       + (len(list_distinct(string_split_regex(clean_text, '\\s+')))::DOUBLE
-                          / len(string_split_regex(clean_text, '\\s+'))::DOUBLE) * 0.5
-                       AS quality_score
-              FROM scrub s JOIN keepers k ON s.doc_id = k.doc_id),
-            gated AS (SELECT * FROM scored WHERE quality_score >= 0.5)
-            SELECT doc_id, n_tokens, n_tokens_dropped, quality_score,
-                   CAST(SUM(n_tokens) OVER (ORDER BY quality_score DESC, doc_id
-                                            ROWS UNBOUNDED PRECEDING) AS BIGINT)
-                     AS cum_tokens
-            FROM gated
-            QUALIFY cum_tokens <= 10000""",
         "event_freq_cms": """
             WITH keys AS (
               SELECT CAST(user_id AS VARCHAR) AS key FROM events),
@@ -4112,7 +3970,6 @@ def oracle_sql() -> dict[str, str]:
                                                ORDER BY tfidf DESC, t) AS rk
                   FROM scored)
             WHERE rk <= 10""",
-        "sim_topk_bruteforce": _topk_sql(cell_pruned=False),
         "ann_recall_report": _ann_recall_sql(),
         "sim_topk_pq": _pq_sql(),
         "pq_recall_report": _pq_recall_sql(),
@@ -4421,7 +4278,6 @@ def oracle_sql() -> dict[str, str]:
                    round(SUM(q.quality_score) / COUNT(*)::DOUBLE, 6) AS avg_quality
             FROM q JOIN embeddings e ON q.doc_id = e.vec_id
             GROUP BY 1""",
-        "corpus_pipeline": _corpus_pipeline_sql(),
         "corpus_pipeline_v2": _corpus_pipeline_v2_sql(),
         "daily_anomalies": """
             WITH daily AS (
@@ -4673,38 +4529,6 @@ def _cluster_assign_sql() -> str:
                                        ORDER BY cos DESC, c_label) AS rn
           FROM scored)
         WHERE rn = 1"""
-
-
-def _corpus_pipeline_sql() -> str:
-    from flinkproject_spark.functions import duck_hash64
-    from flinkproject_spark.operators.sampling import SAMPLE_MOD
-
-    draw = duck_hash64("'corpus-v1:' || CAST(doc_id AS VARCHAR)")
-    whens = " ".join(
-        f"WHEN '{s}' THEN {int(r * SAMPLE_MOD)}" for s, r in SAMPLE_RATES.items()
-    )
-    toks = "string_split_regex(text, '\\s+')"
-    return f"""
-        WITH keepers AS (
-          SELECT MIN(doc_id) AS doc_id FROM documents GROUP BY md5(text)),
-        scored AS (
-          SELECT d.doc_id, d.lang, d.source,
-                 len({toks})::BIGINT AS n_tokens,
-                 least(len({toks})::DOUBLE / 100.0, 1.0) * 0.5
-                   + (len(list_distinct({toks}))::DOUBLE
-                      / len({toks})::DOUBLE) * 0.5 AS quality_score
-          FROM documents d JOIN keepers k ON d.doc_id = k.doc_id),
-        gated AS (SELECT * FROM scored WHERE quality_score >= 0.5),
-        sampled AS (
-          SELECT * FROM gated
-          WHERE ({draw}) % {SAMPLE_MOD} <
-                CASE source {whens} ELSE {int(0.5 * SAMPLE_MOD)} END)
-        SELECT doc_id, lang, source, n_tokens, quality_score,
-               CAST(SUM(n_tokens) OVER (ORDER BY quality_score DESC, doc_id
-                                        ROWS UNBOUNDED PRECEDING) AS BIGINT)
-                 AS cum_tokens
-        FROM sampled
-        QUALIFY cum_tokens <= 10000"""
 
 
 def _corpus_pipeline_v2_sql() -> str:

@@ -53,7 +53,6 @@ HEADLINE = [
     "dedup_simhash",
     "dedup_ngram_blocked",
     "dedup_embedding",
-    "sim_topk_bruteforce",
     "sim_topk_vectorized",
     "sim_topk_ivf",
     "text_quality",

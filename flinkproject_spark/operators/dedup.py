@@ -51,6 +51,21 @@ def exact_dedup(documents: DataFrame) -> DataFrame:
     )
 
 
+def _keepers(documents: DataFrame, key: Column | str) -> DataFrame:
+    """Keeper dedup: one row per `key` value, the one with the lowest
+    doc_id, every input column kept. A row_number window rather than
+    exact_dedup + join-back: the same keeper set and the same single
+    shuffle on the key, but no self-join — a join whose both sides derive
+    from one input makes Catalyst execute that input's subplan once per
+    side."""
+    w = Window.partitionBy(key).orderBy("doc_id")
+    return (
+        documents.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+
+
 # ---------------------------------------------------------------------------
 # MinHash + LSH
 # ---------------------------------------------------------------------------
@@ -1582,21 +1597,14 @@ def incremental_dedup(new_docs: DataFrame, index: DataFrame) -> DataFrame:
     ingests continuously (a full-corpus re-dedup per batch is O(corpus);
     this is O(batch) plus one anti-join against the index).
 
-    Plan: intra-batch winners via a (content_md5) aggregate, then LEFT ANTI
-    against the index. Both sides hash-partition on content_md5; with the
-    index stored bucketed on that key the anti-join is exchange-free on
-    the index side.
+    Plan: intra-batch winners via the keeper window (_keepers) on
+    content_md5, then LEFT ANTI against the index. Both sides
+    hash-partition on content_md5; with the index stored bucketed on that
+    key the anti-join is exchange-free on the index side.
     """
-    batch_winners = (
-        new_docs.select("doc_id", "lang", F.md5("text").alias("content_md5"))
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("content_md5").orderBy("doc_id")
-            ),
-        )
-        .filter(F.col("rn") == 1)
-        .drop("rn")
+    batch_winners = _keepers(
+        new_docs.select("doc_id", "lang", F.md5("text").alias("content_md5")),
+        "content_md5",
     )
     return (
         batch_winners.join(index, "content_md5", "left_anti")

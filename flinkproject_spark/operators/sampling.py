@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from flinkproject_spark import functions as K
+from flinkproject_spark.operators.text import quality_score, tokens
 
 SAMPLE_MOD = 1_000_000  # rate resolution: 1e-6
 
@@ -67,106 +68,44 @@ def token_budget_pack(documents: DataFrame, budget_tokens: int) -> DataFrame:
     (desc, doc_id tiebreak), take the maximal prefix whose cumulative token
     count stays within `budget_tokens`.
 
-    Quality = the text.quality_scores composite (length + diversity);
-    tokens = whitespace tokens — both computed inline so the operator is
-    self-contained.
+    Quality = the text.quality_score composite (length + diversity);
+    tokens = whitespace tokens.
 
     Scale note: the exact prefix-sum needs a GLOBAL order (single-reducer
     window) — fine up to ~10^8 docs of metadata (the window input is 3
-    columns, not text). The 100 TB form is IMPLEMENTED as
-    :func:`token_budget_pack_banded` (identical output, equality-tested):
-    whole quality bands picked from a driver-side metadata aggregate, the
-    exact window confined to the one boundary band.
+    columns, not text).
     """
-    scored = _quality_scored(documents)
-    w = Window.orderBy(F.desc("quality_score"), F.asc("doc_id")).rowsBetween(
+    return _pack_under_budget(
+        _quality_scored(documents), "quality_score", budget_tokens
+    ).select("doc_id", "lang", "source", "n_tokens", "quality_score", "cum_tokens")
+
+
+def _pack_under_budget(
+    scored: DataFrame, rank_col: str, budget_tokens: int
+) -> DataFrame:
+    """The budget pack token_budget_pack and corpus builds v2 and v5 end
+    with: order by (`rank_col` desc, doc_id asc) and keep the prefix whose
+    running `n_tokens` total (bigint `cum_tokens`) stays within
+    `budget_tokens`."""
+    w = Window.orderBy(F.desc(rank_col), F.asc("doc_id")).rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
     return (
-        scored.withColumn("cum_tokens", F.sum("n_tokens").over(w))
+        scored.withColumn("cum_tokens", F.sum("n_tokens").over(w).cast("bigint"))
         .filter(F.col("cum_tokens") <= budget_tokens)
-        .select("doc_id", "lang", "source", "n_tokens", "quality_score", "cum_tokens")
     )
 
 
 def _quality_scored(documents: DataFrame) -> DataFrame:
-    """Shared scoring projection for the packing operators."""
-    x = F.split("text", r"\s+")
-    n_tok = F.size(x).cast("double")
-    uniq = F.size(F.array_distinct(x)).cast("double")
+    """Per-doc (doc_id, lang, source, n_tokens, quality_score) projection
+    every quality-ranked operator here and corpus build v2 read."""
+    x = tokens("text")
     return documents.select(
         "doc_id",
         "lang",
         "source",
         F.size(x).cast("bigint").alias("n_tokens"),
-        (
-            F.least(n_tok / F.lit(100.0), F.lit(1.0)) * F.lit(0.5)
-            + (uniq / n_tok) * F.lit(0.5)
-        ).alias("quality_score"),
-    )
-
-
-def token_budget_pack_banded(
-    documents: DataFrame, budget_tokens: int, bands: int = 100
-) -> DataFrame:
-    """The 100 TB form of token_budget_pack, producing the IDENTICAL
-    result (equality pinned by test): bucket documents into quality bands,
-    aggregate per-band token totals (`bands` rows — driver metadata, not
-    data), pick whole bands greedily on the driver, and run the exact
-    ordered prefix-sum ONLY inside the single boundary band.
-
-    Why it's the same corpus: the global (quality desc, doc_id) order is
-    exactly (band desc, within-band order) — equal scores land in equal
-    bands — so the global prefix is [all docs of fuller bands] + [a prefix
-    of the boundary band]. The global single-reducer window over every doc
-    collapses to one window over ~1/bands of them; everything else is
-    partial-aggregating or narrow.
-    """
-    scored = _quality_scored(documents).withColumn(
-        "band", F.least(F.floor(F.col("quality_score") * bands), F.lit(bands - 1))
-    )
-    per_band = (
-        scored.groupBy("band")
-        .agg(F.sum("n_tokens").alias("band_tokens"))
-        .orderBy(F.desc("band"))
-        .collect()
-    )
-    remaining, full_bands, boundary = budget_tokens, [], None
-    offset = 0
-    for r in per_band:
-        if r.band_tokens <= remaining:
-            full_bands.append(r.band)
-            remaining -= r.band_tokens
-            offset += r.band_tokens
-        else:
-            boundary = r.band
-            break
-
-    w_full = Window.partitionBy().orderBy(
-        F.desc("quality_score"), F.asc("doc_id")
-    ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    parts = []
-    if full_bands:
-        # cum_tokens inside the full-band prefix: global window over ONLY
-        # the selected bands (already known to fit the budget entirely)
-        parts.append(
-            scored.filter(F.col("band").isin(full_bands))
-            .withColumn("cum_tokens", F.sum("n_tokens").over(w_full))
-        )
-    if boundary is not None:
-        b = scored.filter(F.col("band") == boundary).withColumn(
-            "cum_tokens", F.sum("n_tokens").over(w_full) + F.lit(offset)
-        )
-        parts.append(b.filter(F.col("cum_tokens") <= budget_tokens))
-    if not parts:
-        return _quality_scored(documents).filter(F.lit(False)).withColumn(
-            "cum_tokens", F.lit(0).cast("bigint")
-        )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out.select(
-        "doc_id", "lang", "source", "n_tokens", "quality_score", "cum_tokens"
+        quality_score(x).alias("quality_score"),
     )
 
 
@@ -180,17 +119,7 @@ def corpus_quality_by_cluster(documents: DataFrame, embeddings: DataFrame) -> Da
     the join is co-located, and the per-cluster rollup is one partial-
     aggregating shuffle keyed by label.
     """
-    x = F.split("text", r"\s+")
-    n_tok = F.size(x).cast("double")
-    uniq = F.size(F.array_distinct(x)).cast("double")
-    q = documents.select(
-        "doc_id",
-        F.size(x).cast("bigint").alias("n_tokens"),
-        (
-            F.least(n_tok / F.lit(100.0), F.lit(1.0)) * F.lit(0.5)
-            + (uniq / n_tok) * F.lit(0.5)
-        ).alias("quality_score"),
-    )
+    q = _quality_scored(documents).select("doc_id", "n_tokens", "quality_score")
     j = q.join(
         embeddings.select(F.col("vec_id").alias("doc_id"),
                           F.col("label").cast("bigint").alias("label")),
@@ -498,7 +427,7 @@ def domain_mix_sample(
         "doc_id",
         "lang",
         "source",
-        F.size(F.split("text", r"\s+")).cast("bigint").alias("n_tokens"),
+        F.size(tokens("text")).cast("bigint").alias("n_tokens"),
     )
     tgt = spark.createDataFrame(
         [(s, float(r)) for s, r in sorted(targets.items())], "source string, share double"

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from flinkproject_spark.catalog import local_path
+from flinkproject_spark.operators.text import tokens
 
 
 def _dot(a: str | Column, b: str | Column) -> Column:
@@ -46,48 +47,6 @@ def with_norm(embeddings: DataFrame, vec_col: str = "embedding") -> DataFrame:
 
 def cosine_expr(a: str, b: str, norm_a: str, norm_b: str) -> Column:
     return _dot(a, b) / (F.col(norm_a) * F.col(norm_b))
-
-
-def cosine_topk_bruteforce(
-    embeddings: DataFrame,
-    query_ids: list[int],
-    k: int = 10,
-    normed: DataFrame | None = None,
-) -> DataFrame:
-    """Exact top-k cosine neighbors for each query vector.
-
-    The query side is tiny -> broadcast nested-loop join against the full
-    collection (one scan, no shuffle of the big side); ranking is a
-    per-query window over k rows. Ties break by neighbor id.
-
-    `normed` (r12): a caller that runs SEVERAL pipelines over the same
-    collection (the recall reports score an exact and an approximate arm)
-    passes ONE shared `with_norm(embeddings)` frame — typically lazily
-    checkpointed — so the scan+norm subtree executes once instead of once
-    per arm; values are identical by construction.
-    """
-    e = normed if normed is not None else with_norm(embeddings)
-    queries = e.filter(F.col("vec_id").isin(query_ids)).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("emb").alias("q_emb"),
-        F.col("norm").alias("q_norm"),
-    )
-    cands = e.select(
-        F.col("vec_id").alias("neighbor_id"),
-        F.col("emb").alias("c_emb"),
-        F.col("norm").alias("c_norm"),
-    )
-    scored = (
-        F.broadcast(queries)
-        .join(cands, F.col("query_id") != F.col("neighbor_id"))
-        .withColumn("cosine", F.round(cosine_expr("q_emb", "c_emb", "q_norm", "c_norm"), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "neighbor_id", "cosine")
-    )
 
 
 def _partial_topk(scored: DataFrame, k: int) -> DataFrame:
@@ -164,8 +123,8 @@ def cosine_topk_ivf(
 def cosine_topk_vectorized(
     embeddings: DataFrame, query_ids: list[int], k: int = 10
 ) -> DataFrame:
-    """Arrow-vectorized exact top-k — the 100 TB form of the brute-force
-    tier, same output contract.
+    """Exact top-k cosine neighbours for each query vector (the query
+    itself excluded, ties broken by neighbour id), Arrow-vectorized.
 
     The JVM fold in `_dot` is a higher-order lambda: correct, but it runs on
     Spark's interpreted expression path (no codegen — the same pitfall
@@ -178,7 +137,7 @@ def cosine_topk_vectorized(
 
     Cross-engine note: float64 matmul accumulates in a different order than
     the left-to-right fold; rounding to 6 decimals (the module contract)
-    absorbs it — verified against the same DuckDB oracle as brute-force.
+    absorbs it — verified against the DuckDB oracle's fold.
     """
     from typing import Iterator
 
@@ -341,8 +300,10 @@ def cosine_topk_ivf_nprobe(
     `centroids`: pass the persisted quantizer table (label_centroids
     output, trained once on a sample) — the production shape; when None
     the quantizer is recomputed from the collection, the self-contained
-    oracle form. `normed`: a shared with_norm(embeddings) frame (see
-    cosine_topk_bruteforce — the recall-report scan-sharing hook, r12)."""
+    oracle form. `normed`: a shared with_norm(embeddings) frame — a
+    caller running several pipelines over one collection (the recall
+    reports) passes one, lazily checkpointed, so the scan+norm subtree
+    executes once instead of once per arm."""
     e = normed if normed is not None else with_norm(embeddings)
     cents = (centroids if centroids is not None else label_centroids(embeddings)
              ).select("label", F.col("centroid").alias("cent"))
@@ -610,8 +571,8 @@ def _exact_rerank(
 ) -> DataFrame:
     """Refine stage shared by the compressed tiers: exact cosine on the
     Q x R shortlist only (broadcast the tiny id list against the
-    collection — full vectors never shuffle), reusing the brute-force
-    tier's rounded-cosine ranking contract. `normed`: shared
+    collection — full vectors never shuffle), with the exact tiers'
+    rounded-cosine ranking contract. `normed`: shared
     with_norm(embeddings) frame (recall-report scan sharing, r12)."""
     e = normed if normed is not None else with_norm(embeddings)
     qvecs = e.filter(F.col("vec_id").isin(query_ids)).select(
@@ -695,8 +656,8 @@ def pq_adc_topk(
     exact integers; the final score adds the m block terms in FIXED
     block order (t0 + t1 + ... + t{m-1}, not a commutative SUM), then
     rounds to 6 dp before ranking, so the oracle reproduces scores AND
-    tie-breaks bit-for-bit. The rerank stage reuses the brute-force
-    tier's rounded-cosine contract.
+    tie-breaks bit-for-bit. The rerank stage keeps the exact tiers'
+    rounded-cosine contract.
 
     Returns (query_id, rank, neighbor_id, adc_score) — or with rerank,
     (query_id, rank, neighbor_id, cosine) — the top-k contract shared
@@ -1658,7 +1619,7 @@ def hybrid_rrf_topk(
     """
     t = F.col("t")
     toks = documents.select(
-        "doc_id", F.explode(F.split("text", r"\s+")).alias("t")
+        "doc_id", F.explode(tokens("text")).alias("t")
     ).filter(t.isin(terms))
     n_docs = documents.count()
     tf = toks.groupBy("doc_id", "t").agg(F.count("*").alias("tf"))

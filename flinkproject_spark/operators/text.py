@@ -90,6 +90,19 @@ def corpus_token_summary(documents: DataFrame) -> DataFrame:
 STOPWORDS = ("the", "a", "of", "and", "to")
 
 
+def quality_score(toks: Column) -> Column:
+    """The length + diversity composite in [0, 1] over a token array:
+    min(n/100, 1)/2 + (distinct/n)/2 — the one quality score every
+    operator and corpus build ranks or gates by. Explicit double casts so
+    the DuckDB oracle reproduces it bit-identically."""
+    n_tok = F.size(toks).cast("double")
+    uniq = F.size(F.array_distinct(toks)).cast("double")
+    return (
+        F.least(n_tok / F.lit(100.0), F.lit(1.0)) * F.lit(0.5)
+        + (uniq / n_tok) * F.lit(0.5)
+    )
+
+
 def quality_scores(documents: DataFrame) -> DataFrame:
     """Deterministic quality features + a composite score in [0, ~1].
 
@@ -98,7 +111,6 @@ def quality_scores(documents: DataFrame) -> DataFrame:
     DuckDB oracle reproduces bit-identical values.
     """
     d = with_tokens(documents)
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
     n_tok = F.size("x").cast("double")
     stop_ct = F.size(F.expr(
         "filter(x, t -> t IN ({}))".format(", ".join(f"'{s}'" for s in STOPWORDS))
@@ -110,10 +122,7 @@ def quality_scores(documents: DataFrame) -> DataFrame:
         F.size("x").alias("n_tokens"),
         (stop_ct / n_tok).alias("stopword_ratio"),
         (uniq / n_tok).alias("diversity"),
-        (
-            F.least(n_tok / F.lit(100.0), F.lit(1.0)) * F.lit(0.5)
-            + (uniq / n_tok) * F.lit(0.5)
-        ).alias("quality_score"),
+        quality_score(F.col("x")).alias("quality_score"),
     )
 
 
@@ -596,8 +605,8 @@ def bpe_token_stats(documents: DataFrame) -> DataFrame:
         "doc_id",
         "lang",
         F.size(pieces).cast("bigint").alias("n_bpe_tokens"),
-        F.size(F.split("text", r"\s+")).cast("bigint").alias("n_ws_tokens"),
-        (F.size(pieces).cast("double") / F.size(F.split("text", r"\s+")).cast("double")
+        F.size(tokens("text")).cast("bigint").alias("n_ws_tokens"),
+        (F.size(pieces).cast("double") / F.size(tokens("text")).cast("double")
          ).alias("bpe_per_word"),
     )
 
@@ -785,10 +794,7 @@ def corpus_profile(documents: DataFrame, passthrough: bool = False) -> DataFrame
         (F.col("n_chars").cast("double") / n_tok).alias("avg_token_len"),
         (stop_ct / n_tok).alias("stopword_ratio"),
         (uniq / n_tok).alias("diversity"),
-        (
-            F.least(n_tok / F.lit(100.0), F.lit(1.0)) * F.lit(0.5)
-            + (uniq / n_tok) * F.lit(0.5)
-        ).alias("quality_score"),
+        quality_score(F.col("x")).alias("quality_score"),
         mean_wlen_r.alias("mean_word_len"),
         symbol_r.alias("symbol_ratio"),
         (

@@ -1,78 +1,30 @@
-"""North-star pipeline assembly: the end-to-end training-corpus build.
+"""North-star pipeline assembly: end-to-end training-corpus builds.
 
 The reference's jobs compose log streams into serving tables; the analog a
-pre-training data platform runs over `documents` is this four-stage
-composition, each stage an oracle-checked operator:
+pre-training data platform runs over `documents` is a composition of
+oracle-checked corpus stages, each defined once in its operator module:
 
-  1. exact dedup          (dedup.exact_dedup winners — one content hash
-                           groupBy, the O(corpus) first pass)
-  2. quality gate         (text.quality_scores composite >= threshold —
-                           narrow filter, Gopher/C4-style)
-  3. stratified sampling  (sampling.stratified_sample — deterministic
-                           hash-Bernoulli per source, reproducible across
-                           runs and corpus growth)
-  4. token-budget packing (sampling.token_budget_pack ordering — greedy
-                           quality-first prefix under the budget)
+- keeper dedup          (dedup._keepers — row_number over a content key,
+                         lowest doc_id wins; one shuffle on the key)
+- quality score         (text.quality_score — the length + diversity
+                         composite, via sampling._quality_scored)
+- stratified sampling   (sampling.stratified_sample — deterministic
+                         hash-Bernoulli per source)
+- token-budget packing  (sampling._pack_under_budget — greedy prefix under
+                         the budget, ranked by a score, doc_id tiebreak)
 
-One Catalyst plan end to end: the dedup aggregate and the final packing
-window are the only shuffles; quality + sampling fuse into the scan
-projection. At 100 TB stages 1-3 stream through; stage 4's global window
-swaps for the banded two-phase form documented in token_budget_pack.
+Three builds compose them: v2 (PII scrub, Gopher gate, decontamination,
+md5 dedup, quality gate, sample, quality-ranked pack), v3 (fused profile
+gate, bag-of-words fingerprint dedup, DSIR selection, curriculum order)
+and v5 (span scrub, md5 dedup, Naive Bayes gate, margin-ranked pack).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from flinkproject_spark.operators import dedup, sampling
-
-
-def build_training_corpus(
-    documents: DataFrame,
-    min_quality: float = 0.5,
-    rates: dict[str, float] | None = None,
-    default_rate: float = 1.0,
-    budget_tokens: int = 1_000_000_000,
-) -> DataFrame:
-    """Dedup -> quality-gate -> sample -> pack; returns the packed corpus
-    manifest (doc_id, lang, source, n_tokens, quality_score, cum_tokens)."""
-    # exact dedup as a WINDOW (row_number over the content-hash partition,
-    # lowest doc_id wins) instead of exact_dedup + join-back: identical
-    # keeper set, same single shuffle on the content hash, but no self-join
-    # — a join whose both sides derive from `documents` makes Catalyst
-    # execute the upstream subplan once per side.
-    wdup = Window.partitionBy(F.md5("text")).orderBy("doc_id")
-    base = (
-        documents.withColumn("__rn", F.row_number().over(wdup))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-    x = F.split("text", r"\s+")
-    n_tok = F.size(x).cast("double")
-    uniq = F.size(F.array_distinct(x)).cast("double")
-    scored = base.select(
-        "doc_id",
-        "lang",
-        "source",
-        F.size(x).cast("bigint").alias("n_tokens"),
-        (
-            F.least(n_tok / F.lit(100.0), F.lit(1.0)) * F.lit(0.5)
-            + (uniq / n_tok) * F.lit(0.5)
-        ).alias("quality_score"),
-    ).filter(F.col("quality_score") >= min_quality)
-
-    if rates:
-        scored = sampling.stratified_sample(scored, rates, default_rate=default_rate)
-
-    w = Window.orderBy(F.desc("quality_score"), F.asc("doc_id")).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    return (
-        scored.withColumn("cum_tokens", F.sum("n_tokens").over(w))
-        .filter(F.col("cum_tokens") <= budget_tokens)
-    )
+from flinkproject_spark.operators import dedup, sampling, text
 
 
 def build_training_corpus_v2(
@@ -99,20 +51,19 @@ def build_training_corpus_v2(
                               named-rule rejection, scan-speed)
       3. decontamination     (dedup.contamination_check vs the eval corpus;
                               docs over max_contamination drop)
-      4. exact dedup         (dedup.exact_dedup on the REDACTED text —
+      4. exact dedup         (md5 keeper window on the REDACTED text —
                               scrubbing first means two docs differing only
                               in PII collapse to one)
-      5. stratified sampling (sampling.stratified_sample)
-      6. token-budget pack   (greedy quality-first prefix under budget)
+      5. quality gate        (text.quality_score >= min_quality)
+      6. stratified sampling (sampling.stratified_sample)
+      7. token-budget pack   (greedy quality-first prefix under budget)
 
     Stage order is load-bearing: redaction before hashing (4) and before
     shingling (3) so PII spans can't split otherwise-identical content;
     the quality/contamination gates before sampling so rates apply to the
-    clean pool. Same shuffle budget as v1 plus one shingle-key shuffle
-    for stage 3.
+    clean pool. The shuffles are the dedup window, the pack window and
+    one shingle-key shuffle for stage 3.
     """
-    from flinkproject_spark.operators import text as text_ops
-
     # Stage-reuse design (VERDICT r03 #7 — the audited plan re-executed the
     # scrubbed-text subplan 8x, 36 parquet scans): every stage that CAN be a
     # chained filter is one (gopher via passthrough flags, dedup via a
@@ -122,11 +73,11 @@ def build_training_corpus_v2(
     # the scrubbed corpus is localCheckpoint'ed (lazy) right before that
     # branch — materialize once, both sides read the blocks. Measured at
     # sf0.01: 36 scans -> 3, 6.2 s -> ~2 s, identical oracle hash.
-    base = text_ops.redact_pii(documents, passthrough=True).select(
+    base = text.redact_pii(documents, passthrough=True).select(
         "doc_id", F.col("redacted").alias("text"), "lang", "source"
     )
     base = (
-        text_ops.gopher_quality_flags(base, passthrough=True)
+        text.gopher_quality_flags(base, passthrough=True)
         .filter("keep")
         .select(*base.columns)
     )
@@ -136,35 +87,14 @@ def build_training_corpus_v2(
             F.col("contamination_pct") <= max_contamination
         ).select("doc_id")
         base = base.join(clean, "doc_id")
-    wdup = Window.partitionBy(F.md5("text")).orderBy("doc_id")
-    base = (
-        base.withColumn("__rn", F.row_number().over(wdup))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
+    base = dedup._keepers(base, F.md5("text"))
 
-    x = F.split("text", r"\s+")
-    n_tok = F.size(x).cast("double")
-    uniq = F.size(F.array_distinct(x)).cast("double")
-    scored = base.select(
-        "doc_id",
-        "lang",
-        "source",
-        F.size(x).cast("bigint").alias("n_tokens"),
-        (
-            F.least(n_tok / F.lit(100.0), F.lit(1.0)) * F.lit(0.5)
-            + (uniq / n_tok) * F.lit(0.5)
-        ).alias("quality_score"),
-    ).filter(F.col("quality_score") >= min_quality)
+    scored = sampling._quality_scored(base).filter(
+        F.col("quality_score") >= min_quality
+    )
     if rates:
         scored = sampling.stratified_sample(scored, rates, default_rate=default_rate)
-    w = Window.orderBy(F.desc("quality_score"), F.asc("doc_id")).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    return (
-        scored.withColumn("cum_tokens", F.sum("n_tokens").over(w))
-        .filter(F.col("cum_tokens") <= budget_tokens)
-    )
+    return sampling._pack_under_budget(scored, "quality_score", budget_tokens)
 
 
 def build_training_corpus_v3(
@@ -199,12 +129,10 @@ def build_training_corpus_v3(
     grain (doc -> tokens -> vocab -> doc), so the pool is
     localCheckpoint'ed (lazy) before it — v2's measured stage-reuse fix.
     """
-    from flinkproject_spark.operators import text as text_ops
-
     # stage 1 IS corpus_profile — the passthrough form keeps text for the
     # downstream stages; no expression is re-spelled here
     gated = (
-        text_ops.corpus_profile(documents, passthrough=True)
+        text.corpus_profile(documents, passthrough=True)
         .filter(F.col("gopher_keep") & (F.col("quality_score") >= min_quality))
         .select(
             "doc_id",
@@ -216,16 +144,9 @@ def build_training_corpus_v3(
         )
     )
 
-    wdup = Window.partitionBy("fp").orderBy("doc_id")
-    pool = (
-        gated.withColumn("__rn", F.row_number().over(wdup))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn", "fp")
-    )
-
-    pool = pool.localCheckpoint(eager=False)
-    scores = text_ops.score_against_vocab(
-        pool, text_ops.dsir_vocab(pool, target_lang)
+    pool = dedup._keepers(gated, "fp").drop("fp").localCheckpoint(eager=False)
+    scores = text.score_against_vocab(
+        pool, text.dsir_vocab(pool, target_lang)
     )
     sel = pool.join(
         scores.filter(F.col("log_importance") >= min_importance).select(
@@ -256,86 +177,24 @@ def build_training_corpus_v3(
     )
 
 
-def build_training_corpus_v4(
-    documents: DataFrame,
-    w: int = 8,
-    min_quality: float = 0.5,
-    budget_tokens: int = 10_000,
-) -> DataFrame:
-    """The SUB-DOCUMENT-clean corpus build — the round-7 surface composed
-    end to end, each stage an oracle-checked operator:
-
-      1. span scrub   (dedup.span_dedup_apply — strip repeated w-token
-                       spans from non-keeper copies, keeper protected:
-                       Lee et al.'s cut step runs BEFORE doc-level dedup
-                       so shared boilerplate can't make distinct docs
-                       read as near-dups downstream)
-      2. doc dedup    (md5 window over the SCRUBBED text — scrubbing can
-                       turn former near-dups byte-identical; the same
-                       single-shuffle window form as v1's stage 1)
-      3. quality gate (v1's length/diversity composite, recomputed on
-                       the scrubbed text — the text that actually trains)
-      4. budget pack  (quality-first greedy prefix under budget_tokens —
-                       v1's stage 4, global window with the banded
-                       equal-output twin documented there)
-
-    Stage order is load-bearing both ways: scrub-before-dedup (above) and
-    dedup-before-quality, so a duplicated doc can't spend budget twice.
-    Documents whose every token was a non-keeper duplicate vanish at
-    stage 1 (audited by span_dedup_apply's count columns when run
-    standalone). Returns (doc_id, n_tokens, n_tokens_dropped,
-    quality_score, cum_tokens) — lang/source are deliberately not joined
-    back; the manifest keys on doc_id.
-    """
-    scrubbed = dedup.span_dedup_apply(documents, w)
-
-    wdup = Window.partitionBy(F.md5("clean_text")).orderBy("doc_id")
-    base = (
-        scrubbed.withColumn("__rn", F.row_number().over(wdup))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-    )
-
-    x = F.split("clean_text", r"\s+")
-    n_tok = F.size(x).cast("double")
-    uniq = F.size(F.array_distinct(x)).cast("double")
-    scored = base.select(
-        "doc_id",
-        F.size(x).cast("bigint").alias("n_tokens"),
-        "n_tokens_dropped",
-        (
-            F.least(n_tok / F.lit(100.0), F.lit(1.0)) * 0.5
-            + (uniq / n_tok) * 0.5
-        ).alias("quality_score"),
-    ).filter(F.col("quality_score") >= min_quality)
-
-    wpack = (
-        Window.orderBy(F.desc("quality_score"), F.asc("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        scored.withColumn(
-            "cum_tokens", F.sum("n_tokens").over(wpack).cast("bigint")
-        )
-        .filter(F.col("cum_tokens") <= budget_tokens)
-    )
-
-
 def build_training_corpus_v5(
     documents: DataFrame,
     model: DataFrame,
     w: int = 8,
     budget_tokens: int = 10_000,
 ) -> DataFrame:
-    """The TRAINED-classifier corpus build (VERDICT r10 task 4): v4's
-    scrub -> dedup spine unchanged, but the quality stage is the
-    persisted Naive Bayes model's verdict over the SCRUBBED text (the
-    text that actually trains) and the budget pack ranks by the
-    classifier MARGIN (nb_score_ppm, exact int64) instead of the
-    hand-weighted composite:
+    """The SUB-DOCUMENT-clean, TRAINED-classifier corpus build: the
+    quality stage is the persisted Naive Bayes model's verdict over the
+    SCRUBBED text (the text that actually trains) and the budget pack
+    ranks by the classifier MARGIN (nb_score_ppm, exact int64):
 
-      1. span scrub   (dedup.span_dedup_apply — as v4)
-      2. doc dedup    (md5 window over the scrubbed text — as v4)
+      1. span scrub   (dedup.span_dedup_apply — strip repeated w-token
+                       spans from non-keeper copies, keeper protected:
+                       Lee et al.'s cut step runs BEFORE doc-level dedup
+                       so shared boilerplate can't make distinct docs
+                       read as near-dups downstream)
+      2. doc dedup    (md5 keeper window over the SCRUBBED text —
+                       scrubbing can turn former near-dups byte-identical)
       3. NB gate      (text.nb_model_score under the `model` table from
                        nb_quality_fit: prior + int64 sum of token
                        log-odds; keep iff margin > 0. The model is fit
@@ -344,45 +203,32 @@ def build_training_corpus_v5(
                        classifier predates the day's cleaning run; OOV
                        tokens created by scrubbing score a sound 0)
       4. budget pack  (greedy highest-margin prefix under budget_tokens,
-                       ties to smallest doc_id — v4's window with the
-                       trained ranking key)
+                       ties to smallest doc_id)
 
-    Returns (doc_id, n_tokens, n_tokens_dropped, nb_score_ppm,
-    cum_tokens). Same scale posture as v4: the dedup window and the
-    pack window are the only data-scale shuffles; the vocab join is
-    broadcastable (Zipf-small model table)."""
-    from flinkproject_spark.operators.text import nb_model_score
-
+    Stage order is load-bearing both ways: scrub-before-dedup (above) and
+    dedup-before-gate, so a duplicated doc can't spend budget twice.
+    Documents whose every token was a non-keeper duplicate vanish at
+    stage 1. Returns (doc_id, n_tokens, n_tokens_dropped, nb_score_ppm,
+    cum_tokens) — lang/source are deliberately not joined back; the
+    manifest keys on doc_id. The dedup window and the pack window are the
+    only data-scale shuffles; the vocab join is broadcastable
+    (Zipf-small model table)."""
     scrubbed = dedup.span_dedup_apply(documents, w)
-    wdup = Window.partitionBy(F.md5("clean_text")).orderBy("doc_id")
-    base = (
-        scrubbed.withColumn("__rn", F.row_number().over(wdup))
-        .filter(F.col("__rn") == 1)
-        .drop("__rn")
-        # feats AND the NB scorer both read the scrubbed+deduped corpus;
-        # materialize it once (lazy) or each reference re-runs the whole
-        # span-scrub pipeline — the same measured stage-reuse fix v2/v3
-        # carry (r11 optimization: the before-plan held 14 scans)
-        .localCheckpoint(eager=False)
+    # feats AND the NB scorer both read the scrubbed+deduped corpus;
+    # materialize it once (lazy) or each reference re-runs the whole
+    # span-scrub pipeline — the same measured stage-reuse fix v2/v3
+    # carry (r11 optimization: the before-plan held 14 scans)
+    base = dedup._keepers(scrubbed, F.md5("clean_text")).localCheckpoint(
+        eager=False
     )
-    x = F.split("clean_text", r"\s+")
     feats = base.select(
         "doc_id",
-        F.size(x).cast("bigint").alias("n_tokens"),
+        F.size(text.tokens("clean_text")).cast("bigint").alias("n_tokens"),
         "n_tokens_dropped",
     )
-    margins = nb_model_score(base, model, text_col="clean_text")
+    margins = text.nb_model_score(base, model, text_col="clean_text")
     gated = (
         feats.join(margins, "doc_id")
         .filter(F.col("nb_score_ppm") > 0)
     )
-    wpack = (
-        Window.orderBy(F.desc("nb_score_ppm"), F.asc("doc_id"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        gated.withColumn(
-            "cum_tokens", F.sum("n_tokens").over(wpack).cast("bigint")
-        )
-        .filter(F.col("cum_tokens") <= budget_tokens)
-    )
+    return sampling._pack_under_budget(gated, "nb_score_ppm", budget_tokens)

@@ -73,9 +73,10 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # testdata events.parquet stores TIMESTAMP(NANOS) which Spark's
-        # vectorized reader rejects by default; read as long and convert
-        # (catalog.load_table does the conversion).
+        # the testdata stores TIMESTAMP(MICROS, not UTC-adjusted); an
+        # events.parquet from older testdata stores TIMESTAMP(NANOS), which
+        # Spark's vectorized reader rejects by default: read it as long and
+        # convert (catalog.load_table does the conversion).
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")

@@ -669,17 +669,12 @@ def incremental_dedup_writer(
     style batchId keying when the corpus path must survive replays.
     """
     from pyspark.errors import AnalysisException
-    from pyspark.sql import Window
+
+    from flinkproject_spark.operators.dedup import _keepers
 
     def fn(batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
-        b = batch.withColumn("content_md5", F.md5("text"))
-        w = Window.partitionBy("content_md5").orderBy("doc_id")
-        winners = (
-            b.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1)
-            .drop("rn")
-        )
+        winners = _keepers(batch.withColumn("content_md5", F.md5("text")), "content_md5")
         try:
             idx = spark.read.parquet(index_path)
         except AnalysisException:

@@ -224,93 +224,6 @@ def unique_visits_stream(events: DataFrame, ttl_hours: int = 24) -> DataFrame:
     )
 
 
-def unique_visits_tws(events: DataFrame, ttl_hours: int = 24) -> DataFrame:
-    """A10+A14 on Spark 4's `transformWithState` — the DIRECT
-    KeyedProcessFunction analog (named value state obtained from a
-    StatefulProcessorHandle + per-key event-time timers), structurally 1:1
-    with the reference's ValueState<date> + StateTtlConfig
-    (UniqueVisitApp.java:54-87) where the GroupState form above encodes
-    the TTL as a single timeout slot.
-
-    Output-identical to :func:`unique_visits_stream` (replay parity
-    pinned by test); exists because transformWithState is the API Spark 4
-    positions for new stateful operators — multiple independent named
-    states per key, a real timer SET (registerTimer/deleteTimer/
-    listTimers vs GroupState's one timeout), and native state-schema
-    evolution. The TTL eviction uses an event-time timer (deterministic
-    under replay) rather than getValueState's ttlDurationMs, which is
-    processing-time-based and therefore unreplayable.
-
-    Environment gate (honest negative, r10): PySpark's transformWithState
-    workers serialize their state protocol with google.protobuf, which
-    this sandbox cannot install — construction works everywhere (tested
-    ungated), execution is protobuf-gated (parity test importorskips).
-    On any normal cluster `pip install protobuf` closes the gate; the
-    applyInPandasWithState form above is the sibling that executes here
-    and is the replay-verified production path."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    ttl_ms = ttl_hours * 3600 * 1000
-
-    class UniqueVisits(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._handle = handle
-            self._last = handle.getValueState("last_dt", "last_dt string")
-
-        def handleInputRows(self, key, rows, timerValues):
-            if key[0] == HEARTBEAT_ID:
-                return
-            pdf = _ordered(rows)
-            if not len(pdf):
-                return
-            last_dt = self._last.get()[0] if self._last.exists() else None
-            dts = pdf["ts"].dt.strftime("%Y-%m-%d")
-            keep = []
-            for dt in dts:
-                keep.append(last_dt is None or dt > last_dt)
-                last_dt = dt if last_dt is None else max(last_dt, dt)
-            last_ms = int(_ts_ms(pdf["ts"]).iloc[-1])
-            self._last.update((last_dt,))
-            # one live TTL timer per key: drop stale ones, re-arm past the
-            # watermark (a timer at/behind the watermark would fire  the
-            # instant it is set)
-            for t in list(self._handle.listTimers()):
-                self._handle.deleteTimer(t)
-            self._handle.registerTimer(
-                max(last_ms + ttl_ms, timerValues.getCurrentWatermarkInMs() + 1)
-            )
-            out = pdf[pd.Series(keep, index=pdf.index)]
-            yield pd.DataFrame(
-                {
-                    "event_id": out["event_id"],
-                    "ts": out["ts"].dt.strftime(_TS_FMT),
-                    "user_id": out["user_id"],
-                    "dt": out["ts"].dt.strftime("%Y-%m-%d"),
-                    "event_type": out["event_type"],
-                }
-            )
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            self._last.clear()  # A14: TTL eviction
-            return iter(())
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=UniqueVisits(),
-        outputStructType=(
-            "event_id bigint, ts string, user_id bigint, dt string, "
-            "event_type string"
-        ),
-        outputMode="append",
-        timeMode="eventTime",
-    )
-
-
 # ---------------------------------------------------------------------------
 # A12 — CEP bounce detection with event-time timeout
 # ---------------------------------------------------------------------------

@@ -20,26 +20,24 @@ import pytest
 import __spark_entry__ as entrymod
 from tests.conftest import SF_DIR
 
-# The brute-force ANN baseline intentionally broadcasts the tiny query-vector
-# set against every row (BroadcastNestedLoopJoin) — it exists as the recall
-# oracle for the IVF path, which is the at-scale variant. The multi-probe IVF
-# cross-joins the tiny query set against the tiny centroid table to rank
-# cells — also an intentional small-x-small BNL. corpus_mix and text_logprob
-# cross-join a ONE-row scalar (mix budget / corpus token total) onto a
-# vocab/rate table — metadata x metadata, never data. quality_deciles
-# broadcasts a ONE-row boundary-array table onto every doc (effectively a
-# map-side literal; the BNL side is always exactly one row).
+# The multi-probe IVF cross-joins the tiny query set against the tiny
+# centroid table to rank cells — an intentional small-x-small BNL.
+# corpus_mix and text_logprob cross-join a ONE-row scalar (mix budget /
+# corpus token total) onto a vocab/rate table — metadata x metadata,
+# never data. quality_deciles broadcasts a ONE-row boundary-array table
+# onto every doc (effectively a map-side literal; the BNL side is always
+# exactly one row).
 BNLJ_ALLOWED = {
-    "sim_topk_bruteforce", "sim_topk_ivf_nprobe", "cluster_assign", "corpus_mix",
+    "sim_topk_ivf_nprobe", "cluster_assign", "corpus_mix",
     "text_logprob", "quality_deciles", "text_dsir", "corpus_zipf", "text_tfidf",
     "text_bigram_logprob", "corpus_curriculum", "corpus_pipeline_v3",
     # certificate queries (r05): crossJoins of broadcast SINGLE-ROW
     # aggregates (truth count x soundness flag x recall flag; report x
     # dropped-shingle count) — scalar x scalar, never data x data
     "dedup_minhash_xx", "minhash_pr_report",
-    # composes cosine_topk_bruteforce (the allowed tiny-query-set BNL)
-    # as its exact ground-truth side
-    "ann_recall_report", "pq_recall_report",
+    # the recall report's approximate arm routes queries to cells through
+    # the sim_topk_ivf_nprobe query x centroid cross join
+    "ann_recall_report",
     # the SINGLE-ROW 128 KB bloom bitset broadcast to every task (r08)
     "contamination_bloom",
     # the trained-quantizer tier (r08): Lloyd assignment IS a broadcast
@@ -64,8 +62,7 @@ BNLJ_ALLOWED = {
     "cluster_topics",
     # r11: the composed IVFxPQ tier routes each query by cross-joining
     # the tiny query set against the <=KM_K_MAX-row persisted centroid
-    # table (tiny x tiny, the sim_topk_ivf_nprobe shape); the recall
-    # report additionally composes the allowed brute-force ground truth
+    # table (tiny x tiny, the sim_topk_ivf_nprobe shape)
     "sim_topk_ivf_pq", "ivf_pq_recall_report",
     # r11: the NB classifier broadcasts two 1-ROW frames — the vocab
     # totals (tp, tn, V) into the smoothed-ratio projection and the

@@ -153,7 +153,7 @@ def test_simhash_identical_docs_zero_hamming(spark, tables):
 # --- similarity -------------------------------------------------------------
 
 def test_topk_self_excluded_and_k_respected(tables):
-    out = similarity.cosine_topk_bruteforce(tables["embeddings"], [0, 1], k=5)
+    out = similarity.cosine_topk_vectorized(tables["embeddings"], [0, 1], k=5)
     pdf = out.toPandas()
     assert set(pdf["query_id"]) == {0, 1}
     assert all(pdf.groupby("query_id").size() == 5)
@@ -161,7 +161,7 @@ def test_topk_self_excluded_and_k_respected(tables):
 
 
 def test_ivf_is_subset_of_bruteforce_candidates(tables):
-    bf = similarity.cosine_topk_bruteforce(tables["embeddings"], [0], k=200).toPandas()
+    bf = similarity.cosine_topk_vectorized(tables["embeddings"], [0], k=200).toPandas()
     ivf = similarity.cosine_topk_ivf(tables["embeddings"], [0], k=5).toPandas()
     # every ivf hit appears in the big brute-force list (same scores)
     merged = ivf.merge(bf, on="neighbor_id", suffixes=("_i", "_b"))
@@ -389,20 +389,11 @@ def test_bucketed_join_is_shuffle_free(spark, tables, tmp_path):
         spark.sql("DROP TABLE IF EXISTS b_lineitem")
 
 
-def test_vectorized_topk_equals_bruteforce(tables):
-    from flinkproject_spark.operators import similarity
-
-    qids = [0, 1, 2]
-    a = similarity.cosine_topk_bruteforce(tables["embeddings"], qids).collect()
-    b = similarity.cosine_topk_vectorized(tables["embeddings"], qids).collect()
-    assert sorted(map(tuple, a)) == sorted(map(tuple, b))
-
-
 def test_ivf_recall_measured_against_bruteforce(tables):
     from flinkproject_spark.operators import similarity
 
     qids = [0, 1, 2, 3, 4]
-    exact = similarity.cosine_topk_bruteforce(tables["embeddings"], qids)
+    exact = similarity.cosine_topk_vectorized(tables["embeddings"], qids)
     approx = similarity.cosine_topk_ivf(tables["embeddings"], qids)
     rec = {r.query_id: r.recall for r in similarity.recall_at_k(approx, exact).collect()}
     assert set(rec) == set(qids)
@@ -1309,34 +1300,6 @@ def test_duplicated_spans_corpus_matches_island_invariants(tables):
             assert st + ln < nxt  # disjoint AND non-adjacent (else merged)
 
 
-def test_corpus_pipeline_v4_composes_its_components(tables):
-    """v4's manifest must be consistent with its own stages run
-    standalone: every emitted doc survives the span scrub, is its
-    scrubbed-text group's keeper (min doc_id), carries the scrubbed
-    token count, and the pack prefix is budget-bounded and monotone in
-    (quality desc, doc_id) order."""
-    from flinkproject_spark.plans import corpus
-
-    docs = tables["documents"]
-    out = corpus.build_training_corpus_v4(docs).toPandas()
-    assert len(out) > 0
-    scrub = dedup.span_dedup_apply(docs).toPandas()
-    scrub_by_id = scrub.set_index("doc_id")
-    keepers = set(
-        scrub.sort_values("doc_id").groupby("clean_text").head(1)["doc_id"]
-    )
-    for r in out.itertuples():
-        assert r.doc_id in scrub_by_id.index  # survived the scrub
-        assert r.doc_id in keepers  # keeper of its scrubbed-text group
-        assert r.n_tokens == len(scrub_by_id.loc[r.doc_id, "clean_text"].split()) or (
-            scrub_by_id.loc[r.doc_id, "clean_text"] == "" and r.n_tokens == 1
-        )
-        assert r.n_tokens_dropped == scrub_by_id.loc[r.doc_id, "n_tokens_dropped"]
-    s = out.sort_values(["quality_score", "doc_id"], ascending=[False, True])
-    assert (s["cum_tokens"] == s["n_tokens"].cumsum()).all()
-    assert s["cum_tokens"].max() <= 10_000
-
-
 # --- SRP-LSH embedding near-dup ----------------------------------------------
 
 def test_srp_signatures_deterministic_and_complete(tables):
@@ -1729,19 +1692,6 @@ def test_token_budget_pack_is_maximal_quality_prefix(tables):
         big = sampling.token_budget_pack(tables["documents"], budget * 1000).toPandas()
         nxt = big.sort_values("cum_tokens").iloc[len(out)]
         assert out["cum_tokens"].max() + nxt["n_tokens"] > budget
-
-
-def test_token_budget_pack_banded_equals_exact(tables):
-    """The two-phase banded form (the 100 TB path: whole bands picked from
-    driver-side metadata, exact window only inside the boundary band) must
-    produce the IDENTICAL packed corpus, including cum_tokens."""
-    docs = tables["documents"]
-    for budget in (3, 5_000, 20_000, 10**9):
-        exact = sampling.token_budget_pack(docs, budget).toPandas()
-        banded = sampling.token_budget_pack_banded(docs, budget).toPandas()
-        exact = exact.sort_values("doc_id").reset_index(drop=True)
-        banded = banded.sort_values("doc_id").reset_index(drop=True)
-        pd.testing.assert_frame_equal(exact, banded, check_dtype=False)
 
 
 def test_cluster_assign_covers_every_vector_once(tables):
@@ -2288,7 +2238,7 @@ def test_ivf_nprobe_precomputed_centroids_identical(tables):
 
 
 def test_ivf_nprobe_recall_at_least_single_cell(tables):
-    exact = similarity.cosine_topk_bruteforce(tables["embeddings"], [0, 1, 2], k=10)
+    exact = similarity.cosine_topk_vectorized(tables["embeddings"], [0, 1, 2], k=10)
     one = similarity.cosine_topk_ivf(tables["embeddings"], [0, 1, 2], k=10)
     two = similarity.cosine_topk_ivf_nprobe(tables["embeddings"], [0, 1, 2], k=10, nprobe=2)
     r1 = similarity.recall_at_k(one, exact).agg(F.avg("recall")).first()[0]
@@ -2307,7 +2257,7 @@ def test_ivf_nprobe_all_cells_recovers_brute_force(tables):
     at small nprobe is data-limited, not implementation-limited.)"""
     emb = tables["embeddings"]
     n_cells = emb.select("label").distinct().count()
-    exact = similarity.cosine_topk_bruteforce(emb, [0, 1, 2, 3, 4], k=10)
+    exact = similarity.cosine_topk_vectorized(emb, [0, 1, 2, 3, 4], k=10)
     full = similarity.cosine_topk_ivf_nprobe(emb, [0, 1, 2, 3, 4], k=10, nprobe=n_cells)
     rec = {r.query_id: r.recall for r in similarity.recall_at_k(full, exact).collect()}
     assert rec and all(v == 1.0 for v in rec.values())
@@ -2324,7 +2274,7 @@ def test_ivf_trained_cells_beat_single_arbitrary_cell(tables):
     relab = emb.drop("label").join(
         assigned.select("vec_id", F.col("assigned_label").alias("label")), "vec_id"
     )
-    exact = similarity.cosine_topk_bruteforce(emb, qids)
+    exact = similarity.cosine_topk_vectorized(emb, qids)
     trained = similarity.cosine_topk_ivf_nprobe(relab, qids, nprobe=3)
     single = similarity.cosine_topk_ivf(emb, qids)
     rt = similarity.recall_at_k(trained, exact).agg(F.avg("recall")).first()[0]
@@ -2405,7 +2355,7 @@ def test_pq_rerank_recall_beats_raw_adc(tables):
     assert >= 0.85 to absorb future data regeneration)."""
     emb = tables["embeddings"]
     qids = [0, 1, 2, 3, 4]
-    exact = similarity.cosine_topk_bruteforce(emb, qids)
+    exact = similarity.cosine_topk_vectorized(emb, qids)
     raw = similarity.pq_adc_topk(emb, qids)
     rer = similarity.pq_adc_topk(emb, qids, rerank=100)
     r_raw = similarity.recall_at_k(raw, exact).agg(F.avg("recall")).first()[0]
@@ -2489,7 +2439,7 @@ def test_ivf_pq_persisted_equals_inline_and_recall_bounds(tables):
     inline = similarity.ivf_pq_topk(emb, qids)
     assert key(served) == key(inline)
 
-    exact = similarity.cosine_topk_bruteforce(emb, qids)
+    exact = similarity.cosine_topk_vectorized(emb, qids)
     asg = similarity.kmeans_assign(emb, centroids=cent).select(
         "vec_id", F.col("cid").alias("label")
     )
@@ -2757,15 +2707,30 @@ def test_nb_model_score_oov_is_prior_and_serve_matches_inline(tables):
 
 
 def test_pipeline_v5_margin_ranked_and_budgeted(tables):
-    """v5's pack must be the greedy highest-margin prefix: kept rows are
-    exactly the top of the margin ordering, every kept margin is
-    positive, and the running total respects the budget."""
+    """v5's manifest must be consistent with its own stages run
+    standalone: every emitted doc survives the span scrub, is its
+    scrubbed-text group's keeper (min doc_id) and carries the scrubbed
+    token counts; the pack must be the greedy highest-margin prefix:
+    kept rows are exactly the top of the margin ordering, every kept
+    margin is positive, and the running total respects the budget."""
     from flinkproject_spark.plans import corpus
 
     docs = tables["documents"]
     model = text.nb_quality_fit(docs)
     out = corpus.build_training_corpus_v5(docs, model).toPandas()
     assert len(out), "v5 kept nothing"
+    scrub = dedup.span_dedup_apply(docs).toPandas()
+    scrub_by_id = scrub.set_index("doc_id")
+    keepers = set(
+        scrub.sort_values("doc_id").groupby("clean_text").head(1)["doc_id"]
+    )
+    for r in out.itertuples():
+        assert r.doc_id in scrub_by_id.index  # survived the scrub
+        assert r.doc_id in keepers  # keeper of its scrubbed-text group
+        assert r.n_tokens == len(scrub_by_id.loc[r.doc_id, "clean_text"].split()) or (
+            scrub_by_id.loc[r.doc_id, "clean_text"] == "" and r.n_tokens == 1
+        )
+        assert r.n_tokens_dropped == scrub_by_id.loc[r.doc_id, "n_tokens_dropped"]
     assert (out.nb_score_ppm > 0).all()
     s = out.sort_values(["nb_score_ppm", "doc_id"], ascending=[False, True])
     assert (s.cum_tokens.diff().dropna() > 0).all()
@@ -2891,7 +2856,9 @@ def test_bigram_logprob_covers_exactly_docs_with_two_plus_tokens(tables):
 
 def test_corpus_profile_equals_each_component_operator(tables):
     """The fused one-scan audit can never drift from its parts: every
-    column must equal the standalone operator's output, doc by doc."""
+    column must equal the standalone operator's output, doc by doc. The
+    quality score is one decision: the packing and per-cluster operators
+    read the same value per doc."""
     docs = tables["documents"]
     prof = text.corpus_profile(docs).toPandas().set_index("doc_id").sort_index()
 
@@ -2904,6 +2871,23 @@ def test_corpus_profile_equals_each_component_operator(tables):
     assert (prof.stopword_ratio == q.stopword_ratio).all()
     assert (prof.diversity == q.diversity).all()
     assert (prof.quality_score == q.quality_score).all()
+
+    packed = sampling.token_budget_pack(docs, 10**9).toPandas()
+    packed = packed.set_index("doc_id").sort_index()
+    assert list(packed.index) == list(prof.index)
+    assert (packed.quality_score == prof.quality_score).all()
+    # corpus_quality_by_cluster's per-doc input, and its per-label mean
+    per_doc = sampling._quality_scored(docs).toPandas().set_index("doc_id").sort_index()
+    assert (per_doc.quality_score == prof.quality_score).all()
+    emb = tables["embeddings"]
+    labels = emb.select(F.col("vec_id").alias("doc_id"), "label").toPandas()
+    want = (
+        prof.join(labels.set_index("doc_id"), how="inner")
+        .groupby("label").quality_score.mean()
+    )
+    got = sampling.corpus_quality_by_cluster(docs, emb).toPandas().set_index("label")
+    assert len(got) == len(want)
+    assert ((got.avg_quality - want.reindex(got.index)).abs() <= 1e-6).all()
 
     g = text.gopher_quality_flags(docs).toPandas().set_index("doc_id").sort_index()
     assert (prof.mean_word_len == g.mean_word_len).all()

@@ -204,38 +204,6 @@ def test_unique_visits_stream_drops_rows_behind_the_watermark(spark, tmp_path):
     ]
 
 
-def test_unique_visits_tws_construction(spark, events, staged):
-    """The transformWithState twin (A10+A14 via Spark 4's
-    StatefulProcessor) must CONSTRUCT everywhere — plan building needs no
-    google.protobuf, only execution does — and carry the exact output
-    schema of the applyInPandasWithState production path."""
-    wm = jobs.watermarked_events(_stream(spark, staged), delay="1 minute")
-    df = stateful.unique_visits_tws(wm)
-    assert df.isStreaming
-    assert [(f.name, f.dataType.simpleString()) for f in df.schema.fields] == [
-        ("event_id", "bigint"),
-        ("ts", "string"),
-        ("user_id", "bigint"),
-        ("dt", "string"),
-        ("event_type", "string"),
-    ]
-
-
-def test_unique_visits_tws_matches_batch(spark, events, staged):
-    """Replay parity for the transformWithState twin: identical output to
-    the oracle-checked batch operator (and therefore to
-    unique_visits_stream, which pins the same rows above). Execution-gated
-    on google.protobuf — PySpark's transformWithState worker serializes
-    its state protocol with protobuf, uninstallable in this sandbox; on
-    any normal cluster the gate is `pip install protobuf`."""
-    pytest.importorskip("google.protobuf")
-    wm = jobs.watermarked_events(_stream(spark, staged), delay="1 minute")
-    got = replay.run_to_table(stateful.unique_visits_tws(wm))
-    want = state.unique_visits(events)
-    cols = want.columns
-    assert _sorted_rows(got, cols) == _sorted_rows(want, cols)
-
-
 def test_bounce_stream_matches_batch_incl_timeout_path(spark, events, staged):
     wm = jobs.watermarked_events(_stream(spark, staged), delay="1 minute")
     got = replay.run_to_table(stateful.detect_bounces_stream(wm))

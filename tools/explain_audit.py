@@ -78,8 +78,8 @@ def main() -> None:
             "whole-stage-compiled JVM code, not interpreted expressions (an\n"
             "AQE-wrapped plan — anything with an exchange — prints codegen ids\n"
             "only at execution, so '—' there means 'adaptive', not 'interpreted').\n"
-            "`sim_topk_bruteforce` is the one intended BNL join (tiny query-vector\n"
-            "set broadcast; the IVF variant is the at-scale path).\n\n"
+            "BNL joins are intended only where one side is tiny or a single row\n"
+            "(`BNLJ_ALLOWED` in `tests/test_explain.py`).\n\n"
             "| query | join strategies | exchanges | partial_agg | pushdown | codegen |\n"
             "|---|---|---|---|---|---|\n"
         )
